@@ -89,28 +89,6 @@ def exact_dedup(
     )
 
 
-def minhash_signature(
-    text: Column, num_hashes: int = 64, shingle_n: int = 3
-) -> Column:
-    """k-minhash signature as array<bigint>.
-
-    Shingle hashes are computed once (xxhash64), then each of the k
-    signature slots is an ``array_min`` over an affine re-hash — k narrow
-    expressions over an in-memory array, no extra passes over the data.
-    """
-    sh = shingles_col(text, shingle_n)
-    base = F.transform(sh, lambda s: F.pmod(F.xxhash64(s), F.lit(_P)))
-
-    def affine(a: int, b: int):
-        return lambda h: (F.lit(a) * h + F.lit(b)) % F.lit(_P)
-
-    slots = [
-        F.array_min(F.transform(base, affine(a, b)))
-        for a, b in _hash_coeffs(num_hashes)
-    ]
-    return F.array(*slots)
-
-
 def spread_small_input(df: DataFrame, factor: int = 2) -> DataFrame:
     """OPT-IN parallelism floor: a small parquet input (one file / one
     row group) scans as ONE partition, serializing per-row work on a
@@ -318,37 +296,6 @@ def minhash_lsh_dedup(
         .select(id_col)
     )
     return df.join(keep_ids, on=id_col, how="left_semi")
-
-
-def simhash_col(text: Column, bits: int = 64) -> Column:
-    """SimHash: per-bit majority over token hashes -> bigint key.
-
-    bit_i(doc) = sign( sum_tokens( bit_i(hash(tok)) ? +1 : -1 ) ).
-    Implemented as one ``aggregate`` over the token array accumulating a
-    64-slot count vector — single projection, no UDF, no shuffle.
-    """
-    toks = tokens_col(text)
-    zero = F.array_repeat(F.lit(0).cast("long"), bits)
-
-    def token_bits(t):  # ±1 per bit of the token hash (static bit indices)
-        h = F.xxhash64(t)
-        return F.array(*[
-            F.shiftrightunsigned(h, i).bitwiseAND(F.lit(1)).cast("long") * 2 - 1
-            for i in range(bits)
-        ])
-
-    acc = F.aggregate(
-        toks, zero,
-        lambda a, t: F.zip_with(a, token_bits(t), lambda x, y: x + y),
-    )
-    # pack sign bits into one bigint (bit 63 wraps to the sign bit)
-    out = F.lit(0).cast("long")
-    for i in range(bits):
-        weight = (1 << i) if i < 63 else -(1 << 63)
-        out = out.bitwiseOR(
-            F.when(F.element_at(acc, i + 1) > 0, F.lit(weight).cast("long"))
-            .otherwise(F.lit(0).cast("long")))
-    return out
 
 
 def simhash_table(

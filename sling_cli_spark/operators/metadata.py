@@ -70,11 +70,3 @@ def with_row_num(
         .drop("__mid", "__pid", "pid", "__off")
     )
     return out
-
-
-def with_row_id(df: DataFrame, col: str = "_sling_row_id") -> DataFrame:
-    return df.withColumn(col, F.monotonically_increasing_id())
-
-
-def with_exec_id(df: DataFrame, exec_id: str, col: str = "_sling_exec_id") -> DataFrame:
-    return df.withColumn(col, F.lit(exec_id))

@@ -176,13 +176,6 @@ def apply_select(df: DataFrame, select: list[str]) -> DataFrame:
     return df.select(*out)
 
 
-def _glob_match(pattern: str, cols: list[str], lower_map: dict[str, str]) -> list[str]:
-    if "*" in pattern or "?" in pattern:
-        return [c for c in cols if fnmatch.fnmatchcase(c.lower(), pattern.lower())]
-    hit = lower_map.get(pattern.lower())
-    return [hit] if hit else []
-
-
 # ----------------------------------------------------------------------
 # column casing
 
@@ -190,13 +183,6 @@ def _glob_match(pattern: str, cols: list[str], lower_map: dict[str, str]) -> lis
 def _snake_split(name: str) -> str:
     # the reference's matchAllCap: lower/digit -> upper boundary only
     return re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", name)
-
-
-def _snake(name: str) -> str:
-    s = re.sub(r"(.)([A-Z][a-z]+)", r"\1_\2", name)
-    s = re.sub(r"([a-z0-9])([A-Z])", r"\1_\2", s)
-    s = re.sub(r"[^0-9a-zA-Z_]+", "_", s)
-    return re.sub(r"_+", "_", s).lower().strip("_")
 
 
 def _camel(name: str) -> str:

@@ -425,6 +425,8 @@ def _run_impl(
     if cfg.target.options.pre_sql:
         _exec_sql(spark, cfg.target.options.pre_sql)
 
+    if target_df is None:
+        target_df = _existing_lake_target(spark, cfg)
     watermark = None
     if cfg.mode == Mode.INCREMENTAL and cfg.source.update_key and target_df is not None:
         watermark = max_watermark(target_df, cfg.source.update_key)
@@ -658,6 +660,27 @@ def _run_impl(
     if cfg.target.options.post_sql:
         _exec_sql(spark, cfg.target.options.post_sql)
     return result
+
+
+def _existing_lake_target(spark: SparkSession, cfg: Config) -> DataFrame | None:
+    """The current contents of an existing Delta or Iceberg target of a
+    merge-mode task with a primary key, or None. Callers that pass no
+    ``target_df`` (replications, the CLI) then still read the watermark
+    and merge, instead of appending the whole source again."""
+    if cfg.mode not in (Mode.INCREMENTAL, Mode.BACKFILL,
+                        Mode.CHANGE_CAPTURE) or not cfg.source.primary_key:
+        return None
+    fmt, obj = _lake_merge_format(cfg), cfg.target.object or ""
+    if fmt == "delta":
+        from sling_cli_spark.sources.delta_py import is_delta_table, read_delta
+
+        return read_delta(spark, obj) if is_delta_table(obj) else None
+    if fmt == "iceberg":
+        from sling_cli_spark.sources.iceberg_py import (
+            is_iceberg_table, read_iceberg)
+
+        return read_iceberg(spark, obj) if is_iceberg_table(obj) else None
+    return None
 
 
 def _lake_merge_format(cfg: Config) -> str | None:

@@ -1520,14 +1520,6 @@ def open_api_conn(conn_url: str) -> "APIConnection":
     return reg["conn"]
 
 
-def reset_api_conn(name: str) -> None:
-    """Drop the cached live connection (fresh queues on next open) —
-    called between replication RUNS sharing one registration."""
-    reg = _API_CONNS.get(name.lower().removeprefix("api://"))
-    if reg is not None:
-        reg["conn"] = None
-
-
 def records_to_df(spark, records: list[dict], flatten_level=None):
     """Record dicts -> DataFrame with ALPHABETICAL column order (the
     reference's documented `*`/unselected ordering for API streams —

@@ -854,14 +854,6 @@ def _apply_action_lines(text: str, meta, files, protocol):
     return meta, files, protocol
 
 
-def _replay_json_into(path: str, fs, versions, meta, files, protocol=None):
-    for v in versions:
-        meta, files, protocol = _apply_action_lines(
-            fs.read_bytes(_log_path(path, v)).decode(),
-            meta, files, protocol)
-    return meta, files, protocol
-
-
 _COMPACTED_RE = re.compile(r"^(\d{20})\.(\d{20})\.compacted\.json$")
 
 

@@ -1,62 +1,37 @@
-"""Structured Streaming SOURCE over the delta_py table layer, built on
-PySpark 4's public Python DataSource API (pyspark.sql.datasource) —
-``spark.readStream.format("delta_stream").option("path", t).load()``
+"""``format("delta_stream")``: the Delta adapter of the lake stream core
+(:mod:`sling_cli_spark.streaming.lake_stream`) over the delta_py table
+layer. ``spark.readStream.format("delta_stream").option("path", t)``
 micro-batches one Delta COMMIT RANGE at a time, the same offset model
 as delta-spark's streaming source (reference surface:
 core/sling/task.go streaming reads are file-watch based; this is the
 Spark-native equivalent over the transaction log).
 
-Semantics (delta-spark's): each micro-batch covers the versions
-committed since the last checkpointed offset; only dataChange adds
-emit rows (compaction rearrangements are silent). A version that
-REMOVES data (update/delete/overwrite) is not expressible as an
-append-only stream — it raises unless ``ignoreChanges=true``, which
-re-emits touched files whole (delta-spark's documented contract).
+What this adapter owns:
 
-Scale shape: offsets and version parsing are driver-side metadata;
-each data FILE is one ``InputPartition`` read executor-side as Arrow
-record batches (zero-copy into Spark), so a 1000-file commit fans out
-across the cluster like any file source. Partition-column values ride
-the partition object and attach as constant arrays.
+- the offset model: ``{"version"}``, starting at ``startingVersion - 1``
+  (or the commit a ``startingTimestamp`` resolves to);
+- unit listing: each version's commit JSON. Only dataChange adds emit
+  rows (compaction rearrangements are silent). A version that REMOVES
+  data (update/delete/overwrite) is not expressible as an append-only
+  stream — it raises unless ``ignoreChanges=true``, which re-emits
+  touched files whole minus their deletion-vector rows (delta-spark's
+  documented contract). ``readChangeFeed=true`` emits row changes;
+- the commit protocol: adds plus a SetTransaction (``txn``) action per
+  micro-batch (PROTOCOL.md §Transaction Identifiers); a re-delivered
+  batch id is recognized via :func:`delta_py.last_txn_version`.
+
+Partition values ride the partition object and win over file columns;
+file columns are passed through uncast.
 """
 
 from __future__ import annotations
 
 import json
-from typing import TYPE_CHECKING
 
-from pyspark.sql.datasource import (
-    DataSource, DataSourceStreamReader, DataSourceStreamWriter,
-    InputPartition, WriterCommitMessage)
+from pyspark.sql.datasource import DataSource
 
-if TYPE_CHECKING:  # pragma: no cover
-    pass
-
-
-class _FilePart(InputPartition):
-    def __init__(self, uri: str, schema_json: str, part_values: dict,
-                 cdf: tuple | None = None, dv: tuple | None = None,
-                 phys: dict | None = None):
-        self.uri = uri
-        self.schema_json = schema_json
-        self.part_values = part_values or {}
-        # (change_type|None, commit_version, commit_ts) — change feed
-        # partitions; change_type None = the cdc file carries its own
-        # _change_type column (update pre/post images)
-        self.cdf = cdf
-        # (descriptor, blob|None) — the add's deletionVector: rows it
-        # dooms must NOT be emitted (ignoreChanges re-emits touched
-        # files whole, but a DV'd row is DELETED, not duplicated). The
-        # blob is pre-read driver-side so executors need no fs client.
-        self.dv = dv
-        # column-mapped tables: logical name -> PHYSICAL parquet column
-        # name (files store physical; the stream schema is logical)
-        self.phys = phys
-        # (baseRowId, defaultRowCommitVersion, rid_col, rcv_col) —
-        # withRowIds partitions; the last two are the table's
-        # materialized row-tracking column names (rewrites thread the
-        # original ids through them) or None
-        self.lineage = None
+from sling_cli_spark.streaming.lake_stream import (
+    _FilePart, _LakeStreamReader, _LakeStreamWriter, _flag, _schema_shim)
 
 
 def _phys_map(meta: dict) -> dict | None:
@@ -73,33 +48,6 @@ def _phys_map(meta: dict) -> dict | None:
         if p:
             out[f["name"]] = p
     return out
-
-
-def _arrow_type_opt(spark_type: str):
-    """Arrow type for a Spark typeName, or None when no 1:1 mapping
-    exists (complex types): callers must NOT cast in that case — the
-    parquet file's own physical type is already what Spark expects."""
-    import re as _re
-
-    import pyarrow as pa
-
-    m = _re.fullmatch(r"decimal\((\d+),\s*(-?\d+)\)", spark_type)
-    if m:
-        return pa.decimal128(int(m.group(1)), int(m.group(2)))
-    return {
-        "long": pa.int64(), "integer": pa.int32(), "short": pa.int16(),
-        "byte": pa.int8(), "double": pa.float64(), "float": pa.float32(),
-        "boolean": pa.bool_(), "date": pa.date32(),
-        "timestamp": pa.timestamp("us", tz="UTC"),
-        "timestamp_ntz": pa.timestamp("us"),
-        "binary": pa.binary(), "string": pa.string(),
-    }.get(spark_type)
-
-
-def _arrow_type(spark_type: str):
-    import pyarrow as pa
-
-    return _arrow_type_opt(spark_type) or pa.string()
 
 
 def _require_full_range(versions: list[int], start: int, end: int,
@@ -137,22 +85,6 @@ def _dv_payload(table_path: str, add: dict) -> tuple | None:
     return (dict(desc), blob, table_path)
 
 
-def _py_value(spark_type: str, s: str):
-    if s is None:
-        return None
-    if spark_type in ("long", "integer", "short", "byte"):
-        return int(s)
-    if spark_type in ("double", "float"):
-        return float(s)
-    if spark_type == "boolean":
-        return s.lower() == "true"
-    if spark_type == "date":
-        import datetime
-
-        return datetime.date.fromisoformat(s)
-    return s
-
-
 class DeltaStreamSource(DataSource):
     """``format("delta_stream")`` — register once per session with
     :func:`register_delta_stream`."""
@@ -171,8 +103,8 @@ class DeltaStreamSource(DataSource):
             raise FileNotFoundError(
                 f"not a delta table: {self.options['path']}")
         base = T.StructType.fromJson(json.loads(meta["schemaString"]))
-        if self._cdf():
-            if self._row_ids():
+        if _flag(self.options, "readChangeFeed"):
+            if _flag(self.options, "withRowIds"):
                 raise ValueError(
                     "delta_stream: withRowIds composes with the plain "
                     "append stream only — the change feed carries its "
@@ -180,23 +112,13 @@ class DeltaStreamSource(DataSource):
             return base.add("_change_type", "string") \
                 .add("_commit_version", "long") \
                 .add("_commit_timestamp", "long")
-        if self._row_ids():
+        if _flag(self.options, "withRowIds"):
             return base.add("_row_id", "long") \
                 .add("_row_commit_version", "long")
         return base
 
-    def _cdf(self) -> bool:
-        return str(self.options.get(
-            "readchangefeed",
-            self.options.get("readChangeFeed", "false"))).lower() == "true"
-
-    def _row_ids(self) -> bool:
-        return str(self.options.get(
-            "withrowids",
-            self.options.get("withRowIds", "false"))).lower() == "true"
-
     def streamReader(self, schema):
-        if self._cdf():
+        if _flag(self.options, "readChangeFeed"):
             return _DeltaCdfStreamReader(self.options)
         return _DeltaStreamReader(self.options)
 
@@ -204,267 +126,148 @@ class DeltaStreamSource(DataSource):
         return _DeltaStreamWriter(self.options, schema)
 
 
-class _DeltaStreamReader(DataSourceStreamReader):
-    def __init__(self, options):
-        self._path = options["path"]
-        self._ignore_changes = str(
-            options.get("ignorechanges",
-                        options.get("ignoreChanges", "false"))
-        ).lower() == "true"
-        self._starting = int(options.get("startingversion",
-                                         options.get("startingVersion", 0)))
+class _DeltaStreamReader(_LakeStreamReader):
+    _KEY = "version"
+    _UNIT_CAP = "maxVersionsPerTrigger"
+    # withRowIds (PROTOCOL.md §Row Tracking): micro-batches carry
+    # _row_id / _row_commit_version derived from each add's
+    # (baseRowId, defaultRowCommitVersion) — the streaming twin of
+    # read_delta(with_row_ids=True)
+    _LINEAGE_OPT = "withRowIds"
+    _CDF_COLS = ("_change_type", "_commit_version", "_commit_timestamp")
+    _LINEAGE_COLS = ("_row_id", "_row_commit_version")
+    _PARTS_FIRST = True
+
+    def _setup(self, options) -> int:
+        starting = int(options.get("startingVersion", 0))
         # delta-spark's startingTimestamp twin: epoch ms resolved to
         # the first commit AT OR AFTER the instant through the commit
         # timestamps (monotonic inCommitTimestamp on ICT tables).
         # startingVersion wins when both are given (delta-spark errors
         # there; one deterministic precedence is kinder to configs
         # templated from defaults).
-        st = options.get("startingtimestamp",
-                         options.get("startingTimestamp"))
-        if st is not None and "startingversion" not in options \
-                and "startingVersion" not in options:
+        st = options.get("startingTimestamp")
+        if st is not None and "startingVersion" not in options:
             from sling_cli_spark.sources.delta_py import (
                 first_version_at_or_after, latest_version)
             sv = first_version_at_or_after(self._path, int(st))
             # past the latest commit -> start AFTER the head (stream
             # begins empty and picks up future commits — the streaming
             # reading of "from this instant on")
-            self._starting = latest_version(self._path) + 1 \
-                if sv is None else sv
-        # admission control: at most N table versions per micro-batch,
-        # so a source that BURSTS (a backfill writer, a compactor
-        # replaying history) cannot make one trigger the whole backlog
-        # — state, shuffle and retry unit all scale with it. The Python
-        # DataSource API has no ReadLimit channel and the engine fixes
-        # a stream's FIRST range before consulting initialOffset, so
-        # the cap binds from the second trigger of a reader instance
-        # (batch 0 of a fresh start or restart is uncapped); the anchor
-        # only moves forward (engine-logged offsets never regress).
-        self._max_versions = int(
-            options.get("maxversionspertrigger",
-                        options.get("maxVersionsPerTrigger", 0))) or None
-        # delta-spark's maxFilesPerTrigger / maxBytesPerTrigger twins.
-        # Version-granular: this source cannot split one commit across
-        # triggers, so each cap admits WHOLE versions until the budget
-        # is first met (always at least one version — a single commit
-        # larger than the cap must still drain). Same second-trigger
-        # binding caveat as maxVersionsPerTrigger above.
-        self._max_files = int(
-            options.get("maxfilespertrigger",
-                        options.get("maxFilesPerTrigger", 0))) or None
-        self._max_bytes = int(
-            options.get("maxbytespertrigger",
-                        options.get("maxBytesPerTrigger", 0))) or None
-        # withRowIds (PROTOCOL.md §Row Tracking): micro-batches carry
-        # _row_id / _row_commit_version derived from each add's
-        # (baseRowId, defaultRowCommitVersion) — log metadata the
-        # partition planner already reads; the streaming twin of
-        # read_delta(with_row_ids=True)
-        self._with_row_ids = str(
-            options.get("withrowids",
-                        options.get("withRowIds", "false"))
-        ).lower() == "true"
-        self._last_end: int | None = None
+            starting = latest_version(self._path) + 1 if sv is None else sv
+        return starting - 1
 
-    def initialOffset(self) -> dict:
-        if self._last_end is None:
-            self._last_end = self._starting - 1
-        return {"version": self._starting - 1}
-
-    def latestOffset(self) -> dict:
+    def _pending(self, anchor):
         from sling_cli_spark.sources.delta_py import latest_version
 
         head = latest_version(self._path)
-        anchor = self._last_end
         if anchor is None:
-            return {"version": head}
-        if self._max_versions:
-            head = min(head, anchor + self._max_versions)
-        if (self._max_files or self._max_bytes) and head > anchor:
-            from sling_cli_spark import fsio
-            from sling_cli_spark.sources.delta_py import _log_path
+            return head, []
+        return head, [(v, v) for v in range(anchor + 1, head + 1)]
 
-            fs = fsio.get_fs(self._path)
-            nf = nb = 0
-            admitted = anchor
-            for v in range(anchor + 1, head + 1):
-                try:
-                    text = fs.read_bytes(
-                        _log_path(self._path, v)).decode()
-                except Exception:
-                    # hole (cleaned commit): ADMIT through it so the
-                    # range reaches partitions(), where
-                    # _require_full_range fails loudly — breaking at
-                    # the anchor would stall the stream forever while
-                    # reporting healthy
-                    admitted = v
-                    break
-                for line in text.splitlines():
-                    if '"add"' not in line:
-                        continue
-                    a = json.loads(line).get("add")
-                    if a and a.get("dataChange", True):
-                        nf += 1
-                        nb += int(a.get("size") or 0)
-                admitted = v
-                if (self._max_files and nf >= self._max_files) or \
-                        (self._max_bytes and nb >= self._max_bytes):
-                    break
-            head = admitted
-        # never return less than the anchor — a capped value below an
-        # engine-logged offset would regress the checkpoint
-        return {"version": max(head, anchor)}
+    def _unit_cost(self, v: int):
+        from sling_cli_spark import fsio
+        from sling_cli_spark.sources.delta_py import _log_path
 
-    def partitions(self, start: dict, end: dict):
+        fs, p = fsio.get_fs(self._path), _log_path(self._path, v)
+        if not fs.exists(p):
+            return None  # cleaned commit
+        adds = [a for a in (json.loads(ln).get("add") for ln in
+                            fs.read_bytes(p).decode().splitlines()
+                            if '"add"' in ln)
+                if a and a.get("dataChange", True)]
+        return len(adds), sum(int(a.get("size") or 0) for a in adds)
+
+    def _plan(self, start: int, end: int):
         from sling_cli_spark import fsio
         from sling_cli_spark.sources.delta_py import (
             _add_uri, _list_versions, _log_path, replay_log)
 
-        self._last_end = end["version"]
         meta, _ = replay_log(self._path)
-        current_files = None  # lazy: only withRowIds backfill needs it
         schema_json = meta["schemaString"]
         fields = {f["name"]: f for f in
                   json.loads(schema_json).get("fields") or []}
         part_cols = meta.get("partitionColumns") or []
         phys = _phys_map(meta)
         fs = fsio.get_fs(self._path)
-        parts: list[_FilePart] = []
         versions = [v for v in _list_versions(self._path, fs)
-                    if start["version"] < v <= end["version"]]
-        _require_full_range(versions, start["version"], end["version"],
-                            self._path)
+                    if start < v <= end]
+        _require_full_range(versions, start, end, self._path)
+
+        def part(action: dict, **kw) -> _FilePart:
+            raw = action.get("partitionValues") or {}
+            pv = {c: (fields.get(c, {}).get("type", "string"),
+                      raw.get((phys or {}).get(c, c), raw.get(c)))
+                  for c in part_cols}
+            return _FilePart(_add_uri(self._path, action["path"]),
+                             schema_json, pv, phys=phys, **kw)
+
+        state = {"meta": meta}
+        parts: list[_FilePart] = []
         for v in versions:
-            adds, removes = [], 0
-            for line in fs.read_bytes(
-                    _log_path(self._path, v)).decode().splitlines():
-                if not line.strip():
-                    continue
-                a = json.loads(line)
-                if "add" in a and a["add"].get("dataChange", True):
-                    adds.append(a["add"])
-                elif "remove" in a and a["remove"].get("dataChange", True):
-                    removes += 1
-            if removes and not self._ignore_changes:
-                raise ValueError(
-                    f"delta_stream: version {v} of {self._path} removes "
-                    "data (update/delete/overwrite) — an append-only "
-                    "stream cannot express it; set ignoreChanges=true "
-                    "to re-emit touched files whole")
-            for add in adds:
-                raw = add.get("partitionValues") or {}
-                pv = {
-                    c: (fields.get(c, {}).get("type", "string"),
-                        raw.get((phys or {}).get(c, c), raw.get(c)))
-                    for c in part_cols}
-                part = _FilePart(
-                    _add_uri(self._path, add["path"]), schema_json, pv,
-                    dv=_dv_payload(self._path, add), phys=phys)
-                if getattr(self, "_with_row_ids", False):
-                    src = add
-                    if src.get("baseRowId") is None:
-                        # the version's own add predates row tracking;
-                        # the enable-time backfill RE-ADDED the file
-                        # with its assigned baseRowId — the current
-                        # replayed state is authoritative per file
-                        if current_files is None:
-                            _, current_files = replay_log(self._path)
-                        src = current_files.get(add["path"], add)
-                    if src.get("baseRowId") is None:
-                        # same loud refusal as the batch
-                        # _scan_with_row_ids: a null id would silently
-                        # break a lineage consumer downstream
-                        raise ValueError(
-                            f"delta_stream: add {add['path']} carries "
-                            "no baseRowId — withRowIds needs row "
-                            "tracking; enable it via "
-                            "set_table_properties to backfill")
-                    from sling_cli_spark.sources.delta_py import (
-                        _rt_cols)
-                    rid_col, rcv_col = _rt_cols(meta)
-                    part.lineage = (
-                        int(src["baseRowId"]),
-                        int(src.get("defaultRowCommitVersion") or v),
-                        rid_col, rcv_col)
-                parts.append(part)
+            actions = [json.loads(ln) for ln in fs.read_bytes(
+                _log_path(self._path, v)).decode().splitlines()
+                if ln.strip()]
+            parts += self._version_parts(v, actions, part, state)
         return parts
 
-    def read(self, partition: _FilePart):
+    def _version_parts(self, v, actions, part, state):
+        adds = [a["add"] for a in actions
+                if "add" in a and a["add"].get("dataChange", True)]
+        if not self._ignore_changes and any(
+                "remove" in a and a["remove"].get("dataChange", True)
+                for a in actions):
+            raise ValueError(
+                f"delta_stream: version {v} of {self._path} removes "
+                "data (update/delete/overwrite) — an append-only "
+                "stream cannot express it; set ignoreChanges=true "
+                "to re-emit touched files whole")
+        return [part(add, dv=_dv_payload(self._path, add),
+                     lineage=self._lineage(v, add, state)
+                     if self._with_lineage else None)
+                for add in adds]
+
+    def _lineage(self, v: int, add: dict, state: dict) -> tuple:
+        from sling_cli_spark.sources.delta_py import _rt_cols, replay_log
+
+        src = add
+        if src.get("baseRowId") is None:
+            # the version's own add predates row tracking; the
+            # enable-time backfill RE-ADDED the file with its assigned
+            # baseRowId — the current replayed state is authoritative
+            # per file (replayed once per plan, only when needed)
+            if "files" not in state:
+                state["files"] = replay_log(self._path)[1]
+            src = state["files"].get(add["path"], add)
+        if src.get("baseRowId") is None:
+            # same loud refusal as the batch _scan_with_row_ids: a null
+            # id would silently break a lineage consumer downstream
+            raise ValueError(
+                f"delta_stream: add {add['path']} carries no baseRowId "
+                "— withRowIds needs row tracking; enable it via "
+                "set_table_properties to backfill")
+        return (int(src["baseRowId"]),
+                int(src.get("defaultRowCommitVersion") or v),
+                *_rt_cols(state["meta"]))
+
+    def _load(self, partition: _FilePart):
+        import numpy as np
         import pyarrow as pa
-        import pyarrow.parquet as pq
 
-        fields = json.loads(partition.schema_json).get("fields") or []
-        tbl = pq.read_table(partition.uri)
-        # row positions must be captured BEFORE the DV filter — a row's
-        # id is baseRowId + its position in the PHYSICAL file
-        positions = range(tbl.num_rows)
-        if partition.dv is not None:
-            import numpy as np
+        tbl, positions = super()._load(partition)
+        if partition.dv is None:
+            return tbl, positions
+        from sling_cli_spark.sources.delta_dv import dv_indices
 
-            from sling_cli_spark.sources.delta_dv import dv_indices
-
-            desc, blob, tpath = partition.dv
-            doomed = dv_indices(tpath, desc, blob)
-            keep = np.ones(tbl.num_rows, dtype=bool)
-            keep[doomed[doomed < tbl.num_rows]] = False
-            tbl = tbl.filter(pa.array(keep))
-            positions = np.arange(len(keep))[keep]
-        n = tbl.num_rows
-        cols, names = [], []
-        for f in fields:
-            name, typ = f["name"], f.get("type")
-            typ = typ if isinstance(typ, str) else "string"
-            src = (partition.phys or {}).get(name, name)
-            names.append(name)
-            if name in partition.part_values:
-                ptyp, raw = partition.part_values[name]
-                val = _py_value(ptyp if isinstance(ptyp, str) else "string",
-                                raw)
-                cols.append(pa.array([val] * n, type=_arrow_type(
-                    ptyp if isinstance(ptyp, str) else "string")))
-            elif src in tbl.column_names:
-                cols.append(tbl.column(src).combine_chunks())
-            else:  # file predates an evolved column -> typed nulls
-                cols.append(pa.nulls(n, type=_arrow_type(typ)))
-        if partition.cdf is not None:
-            ct, cv, cts = partition.cdf
-            names.append("_change_type")
-            if ct is None:  # cdc file: pre/post images carry their own
-                cols.append(tbl.column("_change_type").combine_chunks()
-                            .cast(pa.string()))
-            else:
-                cols.append(pa.array([ct] * n, type=pa.string()))
-            names += ["_commit_version", "_commit_timestamp"]
-            cols.append(pa.array([cv] * n, type=pa.int64()))
-            cols.append(pa.array([cts] * n, type=pa.int64()))
-        if partition.lineage is not None:
-            import pyarrow.compute as pc
-
-            base_rid, default_rcv, rid_col, rcv_col = partition.lineage
-            fresh_rid = pa.array([base_rid + int(p) for p in positions],
-                                 type=pa.int64())
-            fresh_rcv = pa.array([default_rcv] * n, type=pa.int64())
-            # materialized columns win when the physical file carries
-            # them (rewrites thread original ids through) — PROTOCOL.md
-            # §Row Tracking: materialized value, else base + position
-            if rid_col and rid_col in tbl.column_names:
-                rid = pc.coalesce(
-                    tbl.column(rid_col).combine_chunks()
-                    .cast(pa.int64()), fresh_rid)
-            else:
-                rid = fresh_rid
-            if rcv_col and rcv_col in tbl.column_names:
-                rcv = pc.coalesce(
-                    tbl.column(rcv_col).combine_chunks()
-                    .cast(pa.int64()), fresh_rcv)
-            else:
-                rcv = fresh_rcv
-            names += ["_row_id", "_row_commit_version"]
-            cols += [rid, rcv]
-        yield from pa.table(dict(zip(names, cols))).to_batches()
-
-    def commit(self, end: dict) -> None:
-        self._last_end = end["version"]
+        # the add's deletion vector: rows it dooms must NOT be emitted
+        # (ignoreChanges re-emits touched files whole, but a DV'd row is
+        # DELETED, not duplicated). Positions are captured BEFORE the
+        # filter — a row's id is baseRowId + its PHYSICAL position
+        desc, blob, tpath = partition.dv
+        doomed = dv_indices(tpath, desc, blob)
+        keep = np.ones(tbl.num_rows, dtype=bool)
+        keep[doomed[doomed < tbl.num_rows]] = False
+        return tbl.filter(pa.array(keep)), positions[keep]
 
 
 class _DeltaCdfStreamReader(_DeltaStreamReader):
@@ -479,295 +282,101 @@ class _DeltaCdfStreamReader(_DeltaStreamReader):
     commits are the POINT here, so nothing refuses; a derived commit
     carrying a deletion vector (underivable) does, exactly like the
     batch reader (delta_py.read_change_feed). Column-mapped tables
-    project physical names back to logical (round 9, same contract as
+    project physical names back to logical (same contract as
     delta_py._read_cdf_actions)."""
 
-    def partitions(self, start: dict, end: dict):
-        from sling_cli_spark import fsio
+    def _version_parts(self, v, actions, part, state):
         from sling_cli_spark.sources.delta_py import (
-            _add_uri, _list_versions, _log_path, commit_timestamp_ms,
-            replay_log)
+            UnsupportedTableFeature, commit_timestamp_ms)
 
-        self._last_end = end["version"]
+        ts = commit_timestamp_ms(self._path, v)
+        cdcs = [a["cdc"] for a in actions if "cdc" in a]
+        if cdcs:  # _change_type rides in the file
+            return [part(a, cdf=(None, v, ts)) for a in cdcs]
+        adds = [a["add"] for a in actions
+                if "add" in a and a["add"].get("dataChange")]
+        removes = [a["remove"] for a in actions
+                   if "remove" in a and a["remove"].get("dataChange")]
+        if any(a.get("deletionVector") for a in adds + removes):
+            raise UnsupportedTableFeature(
+                f"delta_stream change feed: commit {v} attaches a "
+                "deletion vector without cdc files — underivable")
+        return [part(a, cdf=("insert", v, ts)) for a in adds] \
+            + [part(a, cdf=("delete", v, ts)) for a in removes]
+
+
+class _DeltaStreamWriter(_LakeStreamWriter):
+    """Adds land in the table dir; each micro-batch commits them with a
+    SetTransaction (``txn``) action for its (txnAppId, batch id)."""
+
+    _FORMAT = "delta_stream"
+    _FILE_NAME = "part-{}.zstd.parquet"
+
+    def _recorded_layout(self) -> list[str] | None:
+        from sling_cli_spark.sources.delta_py import (
+            _column_mapping_mode, _generation_exprs, _identity_fields,
+            _schema_has_invariants, replay_log)
+
         meta, _ = replay_log(self._path)
-        schema_json = meta["schemaString"]
-        fields = {f["name"]: f for f in
-                  json.loads(schema_json).get("fields") or []}
-        part_cols = meta.get("partitionColumns") or []
-        phys = _phys_map(meta)
-        fs = fsio.get_fs(self._path)
-        parts: list[_FilePart] = []
-        versions = [v for v in _list_versions(self._path, fs)
-                    if start["version"] < v <= end["version"]]
-        _require_full_range(versions, start["version"], end["version"],
-                            self._path)
-        for v in versions:
-            ts = commit_timestamp_ms(self._path, v)
-            actions = [json.loads(ln) for ln in fs.read_bytes(
-                _log_path(self._path, v)).decode().splitlines()
-                if ln.strip()]
-
-            def emit(a: dict, ct: str | None):
-                raw = a.get("partitionValues") or {}
-                pv = {c: (fields.get(c, {}).get("type", "string"),
-                          raw.get((phys or {}).get(c, c), raw.get(c)))
-                      for c in part_cols}
-                parts.append(_FilePart(
-                    _add_uri(self._path, a["path"]), schema_json, pv,
-                    cdf=(ct, v, ts), phys=phys))
-
-            cdcs = [a["cdc"] for a in actions if "cdc" in a]
-            if cdcs:
-                for a in cdcs:
-                    emit(a, None)  # _change_type rides in the file
-                continue
-            adds = [a["add"] for a in actions
-                    if "add" in a and a["add"].get("dataChange")]
-            removes = [a["remove"] for a in actions
-                       if "remove" in a and a["remove"].get("dataChange")]
-            for a in adds + removes:
-                if a.get("deletionVector"):
-                    raise UnsupportedTableFeature(
-                        f"delta_stream change feed: commit {v} attaches "
-                        "a deletion vector without cdc files — "
-                        "underivable")
-            for a in adds:
-                emit(a, "insert")
-            for a in removes:
-                emit(a, "delete")
-        return parts
-
-
-class _SinkMsg(WriterCommitMessage):
-    """``files`` (partitioned writes: one task stages one file per
-    partition value it held) supersedes the single-file fields; the
-    scalar form survives for unpartitioned writes and old tests."""
-
-    def __init__(self, rel: str | None, size: int, n: int, files=None):
-        self.rel = rel
-        self.size = size
-        self.n = n
-        self.files = files  # [{rel, size, n, partitionValues}]
-
-    def file_entries(self):
-        if self.files is not None:
-            return self.files
-        if not self.rel:
-            return []
-        return [{"rel": self.rel, "size": self.size, "n": self.n,
-                 "partitionValues": {}}]
-
-
-class _SchemaShim:
-    """delta_py's first-commit/evolution helpers only touch
-    ``.schema``/``.columns`` of the frame they receive."""
-
-    def __init__(self, schema):
-        self.schema = schema
-        self.columns = [f.name for f in schema.fields]
-
-
-_SINK_SIMPLE = {"long", "integer", "short", "byte", "double", "float",
-                "boolean", "date", "timestamp", "timestamp_ntz",
-                "string", "binary"}
-
-
-class _DeltaStreamWriter(DataSourceStreamWriter):
-    """Exactly-once streaming SINK: executors write final-named parquet
-    straight into the table dir (invisible until committed — the
-    delta invariant), the driver commits adds + a SetTransaction
-    action per micro-batch (PROTOCOL.md §Transaction Identifiers), and
-    a re-delivered batch id is recognized via
-    :func:`delta_py.last_txn_version` and dropped (its re-written
-    files deleted). Pass ``txnAppId`` for idempotence that survives
-    query restarts — it defaults per-writer, which is at-least-once
-    across a restart."""
-
-    def __init__(self, options, schema):
-        import uuid as _uuid
-
-        from sling_cli_spark import fsio
-        from sling_cli_spark.sources.delta_py import replay_log
-
-        self._path = options["path"]
-        fsio.local_path(self._path)  # executors write with plain I/O
-        self._app = options.get("txnappid") or options.get("txnAppId") \
-            or f"delta_stream-{_uuid.uuid4().hex[:12]}"
-        self._schema = schema
-        bad = [f.name for f in schema.fields
-               if f.dataType.typeName() not in _SINK_SIMPLE]
-        if bad:
+        if meta is None:  # no table yet: the first commit records one
+            return None
+        if _column_mapping_mode(meta) != "none":
             raise ValueError(
-                f"delta_stream sink: unsupported column types on {bad} "
-                f"(supported: {sorted(_SINK_SIMPLE)})")
-        self._part_cols: list[str] = list(options.get("partitionby",
-                                          options.get("partitionBy",
-                                                      "")).split(","))
-        self._part_cols = [c for c in self._part_cols if c]
-        try:
-            meta, _ = replay_log(self._path)
-        except FileNotFoundError:
-            meta = None
-        if meta is not None:
-            # the recorded layout wins — a partitionBy option that
-            # disagrees is a config error, not a re-layout
-            recorded = list(meta.get("partitionColumns") or [])
-            if self._part_cols and self._part_cols != recorded:
-                raise ValueError(
-                    f"delta_stream sink: partitionBy={self._part_cols} "
-                    f"!= the table's recorded layout {recorded}")
-            self._part_cols = recorded
-            from sling_cli_spark.sources.delta_py import (
-                _column_mapping_mode, _generation_exprs, _identity_fields,
-                _schema_has_invariants)
-
-            if _column_mapping_mode(meta) != "none":
-                raise ValueError(
-                    "delta_stream sink: column-mapped targets need "
-                    "physical-name staging this sink does not do — "
-                    "use foreachBatch + write_delta")
-
-            conf = meta.get("configuration") or {}
-            declared = [k for k in conf if k.startswith(
-                "delta.constraints.")]
-            if declared or _schema_has_invariants(meta) \
-                    or _generation_exprs(meta) or _identity_fields(meta):
-                raise ValueError(
-                    "delta_stream sink: target declares column "
-                    "contracts (CHECK constraints, invariants, "
-                    "generated or identity columns) this sink does "
-                    "not evaluate — use foreachBatch + write_delta")
-        missing = [c for c in self._part_cols
-                   if c not in {f.name for f in schema.fields}]
-        if missing:
+                "delta_stream sink: column-mapped targets need "
+                "physical-name staging this sink does not do — "
+                "use foreachBatch + write_delta")
+        conf = meta.get("configuration") or {}
+        if any(k.startswith("delta.constraints.") for k in conf) \
+                or _schema_has_invariants(meta) \
+                or _generation_exprs(meta) or _identity_fields(meta):
             raise ValueError(
-                f"delta_stream sink: partition columns {missing} not in "
-                f"the stream schema")
+                "delta_stream sink: target declares column "
+                "contracts (CHECK constraints, invariants, "
+                "generated or identity columns) this sink does "
+                "not evaluate — use foreachBatch + write_delta")
+        return list(meta.get("partitionColumns") or [])
 
-    def write(self, iterator):
-        import os as _os
-        import uuid as _uuid
-        from urllib.parse import quote
-
-        import pyarrow as pa
-        import pyarrow.parquet as pq
-
-        from sling_cli_spark import fsio
-        from sling_cli_spark.sources.delta_py import hive_partition_str
-
-        rows = [r.asDict(recursive=True) for r in iterator]
-        if not rows:
-            return _SinkMsg(None, 0, 0)
-        base = fsio.local_path(self._path)
-        pc = self._part_cols
-        aschema = pa.schema([
-            (f.name, _arrow_type(f.dataType.typeName()))
-            for f in self._schema.fields if f.name not in pc])
-        # one file per partition value this task held (the Hive dir is
-        # over-escaped vs Spark's escapePathName — both unescape %hh, so
-        # a stricter writer is still a compatible reader)
-        groups: dict[tuple, list[dict]] = {}
-        for r in rows:
-            groups.setdefault(tuple(r[c] for c in pc), []).append(r)
-        files = []
-        for key, grp in groups.items():
-            pv = {c: (None if v is None else hive_partition_str(v))
-                  for c, v in zip(pc, key)}
-            if any(v is None for v in pv.values()):
-                raise ValueError(
-                    "delta_stream sink: NULL partition values are not "
-                    "supported")
-            subdir = "/".join(
-                f"{c}={quote(pv[c], safe='')}" for c in pc)
-            ddir = _os.path.join(base, subdir) if subdir else base
-            _os.makedirs(ddir, exist_ok=True)
-            rel = f"part-{_uuid.uuid4().hex}.zstd.parquet"
-            rel = f"{subdir}/{rel}" if subdir else rel
-            dest = _os.path.join(base, rel)
-            tbl = pa.Table.from_pylist(
-                [{k: v for k, v in r.items() if k not in pc}
-                 for r in grp], schema=aschema)
-            # zstd (guide §6): 20-33% fewer bytes than snappy at flat
-            # write time; see tests/test_staged_codec.py
-            pq.write_table(tbl, dest, compression="zstd")
-            files.append({"rel": rel, "size": _os.path.getsize(dest),
-                          "n": len(grp), "partitionValues": pv})
-        return _SinkMsg(None, 0, 0, files=files)
-
-    def _cleanup(self, messages):
-        import os as _os
-
-        from sling_cli_spark import fsio
-
-        base = fsio.local_path(self._path)
-        for m in messages:
-            if m is None:
-                continue
-            for f in m.file_entries():
-                p = _os.path.join(base, f["rel"])
-                if _os.path.exists(p):
-                    _os.remove(p)
-
-    def commit(self, messages, batchId) -> None:
+    def _commit_once(self, entries: list[dict], batch_id: int) -> bool:
         import time as _time
 
         from sling_cli_spark.sources.delta_py import (
             _assign_fresh_row_ids, _commit, _evolve_schema_actions,
-            _first_commit_actions, check_writer_protocol, last_txn_version,
-            latest_version, replay_log)
+            _first_commit_actions, _maybe_auto_checkpoint, _update_crc,
+            check_writer_protocol, last_txn_version, latest_version,
+            replay_log)
 
-        entries = [f for m in messages if m is not None
-                   for f in m.file_entries()]
-        # Re-check idempotence on EVERY claim attempt, not just once up
-        # front: a zombie driver's concurrent commit of the same
-        # (txnAppId, batchId) can land between our check and our claim —
-        # losing the version race must re-read the transaction watermark
-        # before re-claiming, or the batch commits twice.
-        for _ in range(10):
-            seen = last_txn_version(self._path, self._app)
-            if seen is not None and seen >= batchId:
-                self._cleanup(messages)  # batch already committed
-                return
-            now = int(_time.time() * 1000)
-            version = latest_version(self._path) + 1
-            shim = _SchemaShim(self._schema)
-            actions: list[dict] = []
-            wprot: dict = {}
-            if version == 0:
-                actions += _first_commit_actions(shim, self._part_cols)
-            else:
-                wprot = check_writer_protocol(self._path)
-                meta, _ = replay_log(self._path)
-                actions += _evolve_schema_actions(shim, meta)
-            adds = [{"add": {
-                "path": f["rel"], "size": f["size"],
-                "partitionValues": f.get("partitionValues") or {},
-                "modificationTime": now, "dataChange": True,
-                "stats": json.dumps({"numRecords": f["n"]})}}
-                for f in entries]
-            actions += adds
-            actions.append({"txn": {
-                "appId": self._app, "version": int(batchId),
-                "lastUpdated": now}})
-            actions += _assign_fresh_row_ids(
-                self._path, adds, version, protocol=wprot)
-            try:  # pure append: losing the race is always retryable
-                _commit(self._path, version, actions)
-                from sling_cli_spark.sources.delta_py import (
-                    _maybe_auto_checkpoint, _update_crc)
-                _update_crc(self._path, version, actions)
-                # the highest-commit-rate writer is exactly where
-                # delta.checkpointInterval matters most
-                _maybe_auto_checkpoint(self._path, version, actions)
-                return
-            except FileExistsError:
-                continue
-        raise FileExistsError(
-            f"delta_stream sink: could not claim a version after 10 "
-            f"retries at {self._path}")
-
-    def abort(self, messages, batchId) -> None:
-        self._cleanup(messages)
+        seen = last_txn_version(self._path, self._app)
+        if seen is not None and seen >= batch_id:
+            return False
+        now = int(_time.time() * 1000)
+        version = latest_version(self._path) + 1
+        shim = _schema_shim(self._schema)
+        actions: list[dict] = []
+        wprot: dict = {}
+        if version == 0:
+            actions += _first_commit_actions(shim, self._part_cols)
+        else:
+            wprot = check_writer_protocol(self._path)
+            meta, _ = replay_log(self._path)
+            actions += _evolve_schema_actions(shim, meta)
+        adds = [{"add": {
+            "path": f["rel"], "size": f["size"],
+            "partitionValues": f.get("partitionValues") or {},
+            "modificationTime": now, "dataChange": True,
+            "stats": json.dumps({"numRecords": f["n"]})}}
+            for f in entries]
+        actions += adds
+        actions.append({"txn": {
+            "appId": self._app, "version": batch_id, "lastUpdated": now}})
+        actions += _assign_fresh_row_ids(
+            self._path, adds, version, protocol=wprot)
+        # pure append: losing the race (FileExistsError) is retryable
+        _commit(self._path, version, actions)
+        _update_crc(self._path, version, actions)
+        # the highest-commit-rate writer is exactly where
+        # delta.checkpointInterval matters most
+        _maybe_auto_checkpoint(self._path, version, actions)
+        return True
 
 
 def register_delta_stream(spark) -> None:

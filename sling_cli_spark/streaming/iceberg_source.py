@@ -1,71 +1,55 @@
-"""Structured Streaming SOURCE + exactly-once SINK over the
-iceberg_py table layer, built on PySpark 4's public Python DataSource
-API — ``spark.readStream.format("iceberg_stream").option("path", t)``
-micro-batches one SNAPSHOT RANGE at a time, the same incremental-scan
-model as Apache Iceberg's own Spark streaming source (reference
-surface: core/sling/task.go streaming reads are file-watch based; this
-is the Spark-native equivalent over the snapshot chain).
+"""``format("iceberg_stream")``: the Iceberg adapter of the lake stream
+core (:mod:`sling_cli_spark.streaming.lake_stream`) over the iceberg_py
+table layer. ``spark.readStream.format("iceberg_stream").option("path",
+t)`` micro-batches one SNAPSHOT RANGE at a time, the same
+incremental-scan model as Apache Iceberg's own Spark streaming source
+(reference surface: core/sling/task.go streaming reads are file-watch
+based; this is the Spark-native equivalent over the snapshot chain).
 
-Offsets are DATA SEQUENCE NUMBERS (spec v2 §Sequence Numbers): each
-micro-batch covers the main-branch snapshots with ``start.seq < seq <=
-end.seq``, so an offset survives snapshot expiry and concurrent branch
-writes (branch commits bump the table's last-sequence-number but never
-enter the main parent chain this source walks). v1 tables have no
-sequence numbers and are refused. Per snapshot:
+What this adapter owns:
 
-- ``append``  -> emit the entries ADDED by that snapshot (status=1,
-  snapshot_id=self, content=data), discovered via the manifests whose
-  list entry names it as ``added_snapshot_id`` — O(new files), never a
-  full-table diff;
-- ``replace`` (compaction / rewrite, no logical change) -> silent;
-- anything else (``overwrite`` / ``delete`` — CoW merges, eq-delete
-  upserts, delete_missing) removes or supersedes rows, which an
-  append-only stream cannot express -> raise, unless
-  ``ignoreChanges=true`` re-emits that snapshot's added files whole
-  (the documented delta-spark/iceberg streaming contract).
+- the offset model: ``{"seq"}``, DATA SEQUENCE NUMBERS (spec v2
+  §Sequence Numbers) of the main-branch snapshots (or of a named
+  ``branch``), so an offset survives snapshot expiry and concurrent
+  branch writes (branch commits bump the table's last-sequence-number
+  but never enter the parent chain this source walks). v1 tables have
+  no sequence numbers and are refused;
+- unit listing: per snapshot, the entries it ADDED (status=1,
+  snapshot_id=self), found via the manifests whose list entry names it
+  as ``added_snapshot_id`` — O(new files), never a full-table diff. An
+  ``append`` emits them; a ``replace`` (compaction) is silent; anything
+  else (``overwrite``/``delete``) supersedes rows, which an append-only
+  stream cannot express -> raise, unless ``ignoreChanges=true``
+  re-emits that snapshot's added files whole. ``readChangelog=true``
+  emits file-turnover row changes;
+- the commit protocol: one append snapshot per micro-batch whose new
+  manifest names the staged files with the per-file record counts and
+  value bounds the executors computed (no driver footer sweep).
+  Exactly-once rides the snapshot summary — ``streaming-app-id`` +
+  ``streaming-batch-id``, the mechanism Iceberg's own Spark sink uses.
 
-Scale shape: offsets and manifest walks are driver-side METADATA (one
-avro manifest list + the added manifests per batch); each data FILE is
-one ``InputPartition`` read executor-side as Arrow record batches, so
-a 1000-file commit fans out across the cluster like any file source.
-Identity-partition values ride the manifest entry's ``partition``
-struct and attach as constant arrays (the files themselves don't store
-them); columns a file predates read as typed nulls.
-
-The SINK commits one Iceberg append snapshot per micro-batch:
-executors write final-named parquet straight into ``data/`` (invisible
-until the manifest names them — the Iceberg invariant) and return
-per-file record counts + value bounds in their commit messages, so the
-driver writes real ``lower_bounds``/``upper_bounds`` without re-reading
-a single footer (at 1000 files/batch a driver-side footer sweep would
-be the bottleneck). Exactly-once rides the snapshot summary —
-``streaming-app-id`` + ``streaming-batch-id``, the same mechanism
-Iceberg's own Spark sink uses (``spark.app.id`` + epoch id in the
-summary): a re-delivered batch id is recognized by scanning retained
-snapshots' summaries and dropped, its re-written files deleted.
+File columns win over identity-partition values and are cast when
+their Spark type maps 1:1 to Arrow.
 """
 
 from __future__ import annotations
 
 import json
-import os
 
-from pyspark.sql.datasource import (
-    DataSource, DataSourceStreamReader, DataSourceStreamWriter,
-    InputPartition, WriterCommitMessage)
+from pyspark.sql.datasource import CaseInsensitiveDict, DataSource
 
-from sling_cli_spark.streaming.delta_source import (
-    _arrow_type, _arrow_type_opt, _py_value)
-
-_SINK_SIMPLE = {"long", "integer", "short", "byte", "double", "float",
-                "boolean", "date", "timestamp", "timestamp_ntz",
-                "string", "binary"}
+from sling_cli_spark.streaming.lake_stream import (
+    _FilePart, _LakeStreamReader, _LakeStreamWriter, _flag, _schema_shim)
 
 # spark typeName -> iceberg bound type the sink can encode executor-side
 _SPARK_TO_BOUND = {"long": "long", "integer": "int", "double": "double",
                    "float": "float", "string": "string", "date": "date",
                    "boolean": "boolean", "timestamp": "timestamptz",
                    "timestamp_ntz": "timestamp"}
+
+
+def _seq(snap: dict) -> int:
+    return int(snap.get("sequence-number") or 0)
 
 
 def _main_chain(meta: dict, branch: str | None = None) -> list[dict]:
@@ -101,9 +85,9 @@ def _require_chain_coverage(meta: dict, start: int, end: int,
                             branch: str | None = None) -> None:
     """A micro-batch covers sequence numbers (start, end]; snapshots
     EXPIRED out of that range would silently drop their rows from the
-    stream (the iceberg sibling of delta's retention-cleaned commits,
-    r9). Detection: expire_snapshots removes a PREFIX of the main
-    chain, leaving the oldest retained snapshot with a DANGLING parent
+    stream (the iceberg sibling of delta's retention-cleaned commits).
+    Detection: expire_snapshots removes a PREFIX of the main chain,
+    leaving the oldest retained snapshot with a DANGLING parent
     pointer — if that truncation point sits above ``start + 1``, the
     requested range is not fully covered. Branch snapshots taking
     intermediate sequence numbers never false-positive this (the walk
@@ -118,7 +102,7 @@ def _require_chain_coverage(meta: dict, start: int, end: int,
     by_id = {s["snapshot-id"] for s in meta.get("snapshots") or []}
     truncated = parent is not None and int(parent) != -1 \
         and parent not in by_id
-    first_seq = int(oldest.get("sequence-number") or 0)
+    first_seq = _seq(oldest)
     if truncated and first_seq > start + 1:
         raise ValueError(
             f"iceberg_stream: snapshots covering sequence numbers "
@@ -135,7 +119,6 @@ def _added_entries(snap: dict, want_content: int = 0) -> list[dict]:
     from sling_cli_spark.sources.avro_py import read_avro
 
     sid = snap["snapshot-id"]
-    snap_seq = int(snap.get("sequence-number") or 0)
     out: list[dict] = []
     _, manifests = read_avro(snap["manifest-list"])
     for m in manifests:
@@ -149,23 +132,16 @@ def _added_entries(snap: dict, want_content: int = 0) -> list[dict]:
             # data sequence number: explicit on the entry, inherited
             # from the committing snapshot otherwise (spec §Sequence
             # Number Inheritance) — the lineage read needs it
-            f["__seq"] = int(e.get("sequence_number") or snap_seq)
+            f["__seq"] = int(e.get("sequence_number") or _seq(snap))
             if (f.get("content") or 0) == want_content:
                 out.append(f)
     return out
 
 
-class _IceFilePart(InputPartition):
-    def __init__(self, uri: str, schema_json: str, part_values: dict,
-                 cdf: tuple | None = None,
-                 lineage: tuple | None = None):
-        self.uri = uri
-        self.schema_json = schema_json
-        self.part_values = part_values or {}
-        # (change_type, snapshot_id, commit_ts_ms) — changelog parts
-        self.cdf = cdf
-        # (first_row_id, data_sequence_number) — withRowLineage parts
-        self.lineage = lineage
+def _adds_deletes(snap: dict) -> bool:
+    """True when ``snap`` adds position or equality delete files."""
+    return bool(_added_entries(snap, want_content=1)
+                or _added_entries(snap, want_content=2))
 
 
 class IcebergStreamSource(DataSource):
@@ -190,14 +166,14 @@ class IcebergStreamSource(DataSource):
         if any(f.dataType.typeName() == "variant" for f in base.fields):
             # the pyarrow-side reader has no variant arrow mapping —
             # an emitted struct batch would mismatch the declared
-            # VariantType schema (same loud-refusal rule as the r8
+            # VariantType schema (same loud-refusal rule as the
             # decimal fix); batch reads support variant fully
             raise ValueError(
                 "iceberg_stream: variant columns are batch-only here "
                 "(no pyarrow variant mapping) — read_iceberg supports "
                 "them")
-        if self._changelog():
-            if self._lineage():
+        if _flag(self.options, "readChangelog"):
+            if _flag(self.options, "withRowLineage"):
                 raise ValueError(
                     "iceberg_stream: withRowLineage composes with the "
                     "plain append stream only — the changelog stream "
@@ -206,7 +182,7 @@ class IcebergStreamSource(DataSource):
             return base.add("_change_type", "string") \
                 .add("_snapshot_id", "long") \
                 .add("_commit_timestamp_ms", "long")
-        if self._lineage():
+        if _flag(self.options, "withRowLineage"):
             if meta.get("format-version", 1) < 3:
                 raise ValueError(
                     "iceberg_stream: withRowLineage requires "
@@ -216,18 +192,8 @@ class IcebergStreamSource(DataSource):
                 .add("_last_updated_sequence_number", "long")
         return base
 
-    def _changelog(self) -> bool:
-        return str(self.options.get(
-            "readchangelog",
-            self.options.get("readChangelog", "false"))).lower() == "true"
-
-    def _lineage(self) -> bool:
-        return str(self.options.get(
-            "withrowlineage",
-            self.options.get("withRowLineage", "false"))).lower() == "true"
-
     def streamReader(self, schema):
-        if self._changelog():
+        if _flag(self.options, "readChangelog"):
             return _IceChangelogStreamReader(self.options)
         return _IceStreamReader(self.options)
 
@@ -235,222 +201,105 @@ class IcebergStreamSource(DataSource):
         return _IceStreamWriter(self.options, schema)
 
 
-class _IceStreamReader(DataSourceStreamReader):
-    _branch: str | None = None  # class default: ad-hoc constructions
-    #   (tests build via __new__) read main unless told otherwise
+class _IceStreamReader(_LakeStreamReader):
+    _KEY = "seq"
+    # counted in snapshots: branch commits make sequence numbers
+    # non-contiguous on main
+    _UNIT_CAP = "maxSnapshotsPerTrigger"
+    # withRowLineage (spec v3 §Row Lineage): micro-batches carry
+    # _row_id / _last_updated_sequence_number, derived per file from
+    # manifest metadata (first_row_id + row position / data sequence
+    # number) — the streaming twin of read_iceberg(with_row_ids=True)
+    _LINEAGE_OPT = "withRowLineage"
+    _CDF_COLS = ("_change_type", "_snapshot_id", "_commit_timestamp_ms")
+    _LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
+    _CAST = True
 
-    def __init__(self, options):
-        self._path = options["path"]
-        self._ignore_changes = str(
-            options.get("ignorechanges",
-                        options.get("ignoreChanges", "false"))
-        ).lower() == "true"
-        # admission control: at most N snapshots per micro-batch (the
-        # delta source's maxVersionsPerTrigger, counted in snapshots
-        # because branch commits make sequence numbers non-contiguous
-        # on main). The Python DataSource API has no ReadLimit channel
-        # and the engine fixes a stream's FIRST range before consulting
-        # initialOffset, so the cap binds from the second trigger of a
-        # reader instance (batch 0 of a fresh start or restart is
-        # uncapped); the anchor only moves forward.
-        self._max_snapshots = int(
-            options.get("maxsnapshotspertrigger",
-                        options.get("maxSnapshotsPerTrigger", 0))) or None
-        # file/byte admission twins (Spark-Iceberg's streaming
-        # max-files-per-micro-batch): snapshot-granular, budgeted from
-        # the spec Appendix F summary counters when present (zero
-        # manifest reads), else one _added_entries manifest walk
-        self._max_files = int(
-            options.get("maxfilespertrigger",
-                        options.get("maxFilesPerTrigger", 0))) or None
-        self._max_bytes = int(
-            options.get("maxbytespertrigger",
-                        options.get("maxBytesPerTrigger", 0))) or None
-        self._starting = int(options.get("startingsequence",
-                                         options.get("startingSequence",
-                                                     0)))
+    def _setup(self, options) -> int:
         self._branch = options.get("branch") or None
-        # withRowLineage (spec v3 §Row Lineage): micro-batches carry
-        # _row_id / _last_updated_sequence_number, derived per file
-        # from manifest metadata the partition planner already holds
-        # (first_row_id + row position / data sequence number) — the
-        # streaming twin of read_iceberg(with_row_ids=True)
-        self._with_lineage = str(
-            options.get("withrowlineage",
-                        options.get("withRowLineage", "false"))
-        ).lower() == "true"
-        self._last_end: int | None = None
+        return int(options.get("startingSequence", 0))
 
-    def initialOffset(self) -> dict:
-        if self._last_end is None:
-            self._last_end = self._starting
-        return {"seq": self._starting}
-
-    def latestOffset(self) -> dict:
+    def _pending(self, anchor):
         from sling_cli_spark.sources.iceberg_py import _current_metadata
 
         _, meta = _current_metadata(self._path)
         chain = _main_chain(meta, self._branch)
-        if not chain:
-            return {"seq": 0}
-        head = int(chain[-1].get("sequence-number") or 0)
-        if self._max_snapshots and self._last_end is not None:
-            pending = [int(s.get("sequence-number") or 0) for s in chain
-                       if int(s.get("sequence-number") or 0)
-                       > self._last_end]
-            if pending:
-                # forward-only: a capped value below an engine-logged
-                # offset would regress the checkpoint
-                head = max(pending[:self._max_snapshots][-1],
-                           self._last_end)
-        if (self._max_files or self._max_bytes) \
-                and self._last_end is not None:
-            nf = nb = 0
-            admitted = self._last_end
-            for s in chain:
-                seq = int(s.get("sequence-number") or 0)
-                if not (self._last_end < seq <= head):
-                    continue
-                sm = s.get("summary") or {}
-                if sm.get("added-data-files") is not None:
-                    nf += int(sm["added-data-files"])
-                    nb += int(sm.get("added-files-size") or 0)
-                else:  # foreign/pre-counter snapshot: one manifest walk
-                    added = _added_entries(s)
-                    nf += len(added)
-                    nb += sum(int(f.get("file_size_in_bytes") or 0)
-                              for f in added)
-                admitted = seq
-                if (self._max_files and nf >= self._max_files) or \
-                        (self._max_bytes and nb >= self._max_bytes):
-                    break
-            head = max(admitted, self._last_end)
-        return {"seq": head}
+        head = _seq(chain[-1]) if chain else 0
+        if anchor is None:
+            return head, []
+        return head, [(_seq(s), s) for s in chain if _seq(s) > anchor]
 
-    def partitions(self, start: dict, end: dict):
+    def _unit_cost(self, snap: dict):
+        # the spec Appendix F summary counters when present (zero
+        # manifest reads), else one manifest walk
+        sm = snap.get("summary") or {}
+        if sm.get("added-data-files") is not None:
+            return (int(sm["added-data-files"]),
+                    int(sm.get("added-files-size") or 0))
+        added = _added_entries(snap)
+        return (len(added),
+                sum(int(f.get("file_size_in_bytes") or 0) for f in added))
+
+    def _plan(self, start: int, end: int):
         from sling_cli_spark.sources.iceberg_py import (
             _current_metadata, _spark_schema)
 
-        self._last_end = end["seq"]
         _, meta = _current_metadata(self._path)
-        _require_chain_coverage(meta, start["seq"], end["seq"],
-                                self._path, self._branch)
+        _require_chain_coverage(meta, start, end, self._path, self._branch)
         schema = _spark_schema(meta)
         schema_json = schema.json()
         field_types = {f.name: f.dataType.typeName()
                        for f in schema.fields}
-        parts: list[_IceFilePart] = []
+
+        def part(f: dict, **kw) -> _FilePart:
+            pv = {c: (field_types.get(c, "string"), v)
+                  for c, v in (f.get("partition") or {}).items()
+                  if c in field_types}
+            return _FilePart(f["file_path"], schema_json, pv, **kw)
+
+        parts: list[_FilePart] = []
         for snap in _main_chain(meta, self._branch):
-            seq = int(snap.get("sequence-number") or 0)
-            if not (start["seq"] < seq <= end["seq"]):
-                continue
-            op = (snap.get("summary") or {}).get("operation", "append")
-            if op == "replace":
-                continue  # compaction: rearrangement only, no new rows
-            if op != "append" and not self._ignore_changes:
-                raise ValueError(
-                    f"iceberg_stream: snapshot {snap['snapshot-id']} of "
-                    f"{self._path} is a {op!r} (rows removed or "
-                    "superseded) — an append-only stream cannot express "
-                    "it; set ignoreChanges=true to re-emit its added "
-                    "files whole")
-            if op == "append" and not self._ignore_changes \
-                    and _added_entries(snap, want_content=1) \
-                    + _added_entries(snap, want_content=2):
-                raise ValueError(
-                    f"iceberg_stream: snapshot {snap['snapshot-id']} "
-                    "adds delete files under an 'append' summary — "
-                    "rows are superseded; set ignoreChanges=true")
-            for f in _added_entries(snap, want_content=0):
-                pv = {
-                    c: (field_types.get(c, "string"), v)
-                    for c, v in (f.get("partition") or {}).items()
-                    if c in field_types}
-                lineage = None
-                if getattr(self, "_with_lineage", False):
-                    if int(meta.get("format-version", 1)) < 3:
-                        raise ValueError(
-                            "iceberg_stream: withRowLineage requires "
-                            "format-version 3; this table is "
-                            f"v{meta.get('format-version', 1)}")
-                    if f.get("first_row_id") is None:
-                        # same loud refusal as the batch
-                        # read_iceberg_incremental: a silent null id
-                        # would drop rows from a lineage consumer
-                        raise ValueError(
-                            "iceberg_stream: data file "
-                            f"{f['file_path']} carries no first_row_id "
-                            "(written before the v3 upgrade) — "
-                            "withRowLineage cannot cover it; rewrite "
-                            "(compact) the table first")
-                    lineage = (int(f["first_row_id"]),
-                               int(f.get("__seq") or 0))
-                parts.append(_IceFilePart(
-                    f["file_path"], schema_json, pv, lineage=lineage))
+            if start < _seq(snap) <= end:
+                parts += self._snapshot_parts(meta, snap, part)
         return parts
 
-    def read(self, partition: _IceFilePart):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    def _snapshot_parts(self, meta, snap, part):
+        op = (snap.get("summary") or {}).get("operation", "append")
+        if op == "replace":
+            return []  # compaction: rearrangement only, no new rows
+        if op != "append" and not self._ignore_changes:
+            raise ValueError(
+                f"iceberg_stream: snapshot {snap['snapshot-id']} of "
+                f"{self._path} is a {op!r} (rows removed or "
+                "superseded) — an append-only stream cannot express "
+                "it; set ignoreChanges=true to re-emit its added "
+                "files whole")
+        if op == "append" and not self._ignore_changes \
+                and _adds_deletes(snap):
+            raise ValueError(
+                f"iceberg_stream: snapshot {snap['snapshot-id']} "
+                "adds delete files under an 'append' summary — "
+                "rows are superseded; set ignoreChanges=true")
+        return [part(f, lineage=self._lineage(f)
+                     if self._with_lineage else None)
+                for f in _added_entries(snap, want_content=0)]
 
-        fields = json.loads(partition.schema_json).get("fields") or []
-        tbl = pq.read_table(partition.uri)
-        n = tbl.num_rows
-        cols, names = [], []
-        for f in fields:
-            name, typ = f["name"], f.get("type")
-            typ = typ if isinstance(typ, str) else "string"
-            names.append(name)
-            if name in tbl.column_names:
-                col = tbl.column(name).combine_chunks()
-                at = _arrow_type_opt(typ)
-                # cast only when the Spark type maps 1:1 to Arrow
-                # (decimal included); otherwise the file's physical
-                # type already matches the declared stream schema
-                cols.append(col.cast(at) if at is not None else col)
-            elif name in partition.part_values:
-                # identity-partitioned: the value lives in the manifest
-                # entry, not the file
-                ptyp, raw = partition.part_values[name]
-                val = _py_value(ptyp, raw) if isinstance(raw, str) else raw
-                cols.append(pa.array([val] * n, type=_arrow_type(ptyp)))
-            else:  # file predates an evolved column -> typed nulls
-                cols.append(pa.nulls(n, type=_arrow_type(typ)))
-        if partition.cdf is not None:
-            ct, sid, ts = partition.cdf
-            names += ["_change_type", "_snapshot_id",
-                      "_commit_timestamp_ms"]
-            cols.append(pa.array([ct] * n, type=pa.string()))
-            cols.append(pa.array([sid] * n, type=pa.int64()))
-            cols.append(pa.array([ts] * n, type=pa.int64()))
-        if partition.lineage is not None:
-            import pyarrow.compute as pc
-
-            frid, fseq = partition.lineage
-            # derived ids: first_row_id + position (whole-file read, so
-            # position = arange); a rewrite's materialized columns win
-            # when present (ignoreChanges re-emits of overwrite-added
-            # files) — spec: materialized value, else inherited
-            fresh_rid = pa.array(range(frid, frid + n), type=pa.int64())
-            fresh_seq = pa.array([fseq] * n, type=pa.int64())
-            if "_row_id" in tbl.column_names:
-                rid = pc.coalesce(
-                    tbl.column("_row_id").combine_chunks()
-                    .cast(pa.int64()), fresh_rid)
-            else:
-                rid = fresh_rid
-            if "_last_updated_sequence_number" in tbl.column_names:
-                seq = pc.coalesce(
-                    tbl.column("_last_updated_sequence_number")
-                    .combine_chunks().cast(pa.int64()), fresh_seq)
-            else:
-                seq = fresh_seq
-            names += ["_row_id", "_last_updated_sequence_number"]
-            cols += [rid, seq]
-        yield from pa.table(dict(zip(names, cols))).to_batches()
-
-    def commit(self, end: dict) -> None:
-        self._last_end = end["seq"]
+    def _lineage(self, f: dict) -> tuple:
+        # (the source's schema() already refused tables below v3, and a
+        # table's format version never goes down)
+        if f.get("first_row_id") is None:
+            # same loud refusal as the batch read_iceberg_incremental:
+            # a silent null id would drop rows from a lineage consumer
+            raise ValueError(
+                "iceberg_stream: data file "
+                f"{f['file_path']} carries no first_row_id "
+                "(written before the v3 upgrade) — "
+                "withRowLineage cannot cover it; rewrite "
+                "(compact) the table first")
+        # a rewrite's materialized columns win when present
+        # (ignoreChanges re-emits of overwrite-added files)
+        return (int(f["first_row_id"]), int(f.get("__seq") or 0),
+                "_row_id", "_last_updated_sequence_number")
 
 
 class _IceChangelogStreamReader(_IceStreamReader):
@@ -468,217 +317,90 @@ class _IceChangelogStreamReader(_IceStreamReader):
     two manifest walks per snapshot (parent actives vs own), data
     moves executor-side as Arrow batches."""
 
-    def partitions(self, start: dict, end: dict):
+    def _snapshot_parts(self, meta, snap, part):
         from sling_cli_spark.sources.iceberg_py import (
-            UnsupportedTableFeature, _active_entries, _canon,
-            _current_metadata, _spark_schema)
+            UnsupportedTableFeature, _active_entries, _canon)
 
-        self._last_end = end["seq"]
-        _, meta = _current_metadata(self._path)
-        _require_chain_coverage(meta, start["seq"], end["seq"],
-                                self._path, self._branch)
-        schema = _spark_schema(meta)
-        schema_json = schema.json()
-        field_types = {f.name: f.dataType.typeName()
-                       for f in schema.fields}
-        parts: list[_IceFilePart] = []
-        for snap in _main_chain(meta, self._branch):
-            seq = int(snap.get("sequence-number") or 0)
-            if not (start["seq"] < seq <= end["seq"]):
-                continue
-            sid = snap["snapshot-id"]
-            ts = int(snap.get("timestamp-ms") or 0)
-            if _added_entries(snap, want_content=1) \
-                    + _added_entries(snap, want_content=2):
-                raise UnsupportedTableFeature(
-                    f"iceberg_stream changelog: snapshot {sid} adds "
-                    "position/equality delete files — their row sets "
-                    "need sequence-number scoping; use the batch "
-                    "iceberg_changelog")
-            parent = snap.get("parent-snapshot-id")
-            prev = _active_entries(self._path, meta, parent)[0] \
-                if parent is not None else []
-            cur = _active_entries(self._path, meta, sid)[0]
-            prev_by = {_canon(f["file_path"]): f for f in prev}
-            cur_by = {_canon(f["file_path"]): f for f in cur}
-
-            def emit(f: dict, ct: str):
-                pv = {c: (field_types.get(c, "string"), v)
-                      for c, v in (f.get("partition") or {}).items()
-                      if c in field_types}
-                parts.append(_IceFilePart(
-                    f["file_path"], schema_json, pv, cdf=(ct, sid, ts)))
-
-            for p in sorted(set(cur_by) - set(prev_by)):
-                emit(cur_by[p], "insert")
-            for p in sorted(set(prev_by) - set(cur_by)):
-                emit(prev_by[p], "delete")
-        return parts
+        sid = snap["snapshot-id"]
+        ts = int(snap.get("timestamp-ms") or 0)
+        if _adds_deletes(snap):
+            raise UnsupportedTableFeature(
+                f"iceberg_stream changelog: snapshot {sid} adds "
+                "position/equality delete files — their row sets "
+                "need sequence-number scoping; use the batch "
+                "iceberg_changelog")
+        parent = snap.get("parent-snapshot-id")
+        prev = _active_entries(self._path, meta, parent)[0] \
+            if parent is not None else []
+        cur = _active_entries(self._path, meta, sid)[0]
+        prev_by = {_canon(f["file_path"]): f for f in prev}
+        cur_by = {_canon(f["file_path"]): f for f in cur}
+        return [part(cur_by[p], cdf=("insert", sid, ts))
+                for p in sorted(set(cur_by) - set(prev_by))] \
+            + [part(prev_by[p], cdf=("delete", sid, ts))
+               for p in sorted(set(prev_by) - set(cur_by))]
 
 
-class _IceSinkMsg(WriterCommitMessage):
-    """``files`` (partitioned writes: one task stages one file per
-    partition value it held) supersedes the single-file fields; the
-    scalar form survives for unpartitioned writes and old tests."""
+class _IceStreamWriter(_LakeStreamWriter):
+    """Data files land under ``data/``; each micro-batch commits one
+    FastAppend snapshot recording (txnAppId, batch id) in its
+    summary."""
 
-    def __init__(self, rel, size, n, bounds, files=None):
-        self.rel = rel
-        self.size = size
-        self.n = n
-        self.bounds = bounds  # {col: (min_py, max_py)}
-        self.files = files  # [{rel, size, n, bounds, partition}]
+    _FORMAT = "iceberg_stream"
+    _DATA_DIR = "data"
+    _FILE_NAME = "{}.parquet"
 
-    def file_entries(self):
-        if self.files is not None:
-            return self.files
-        if not self.rel:
-            return []
-        return [{"rel": self.rel, "size": self.size, "n": self.n,
-                 "bounds": self.bounds, "partition": None}]
-
-
-class _SchemaShim:
-    """iceberg_py's schema helpers only touch ``.schema``/``.columns``
-    of the frame they receive."""
-
-    def __init__(self, schema):
-        self.schema = schema
-        self.columns = [f.name for f in schema.fields]
-
-
-class _IceStreamWriter(DataSourceStreamWriter):
     def __init__(self, options, schema):
-        import uuid as _uuid
-
-        from sling_cli_spark import fsio
-        from sling_cli_spark.sources.iceberg_py import (
-            _current_metadata, _part_cols, is_iceberg_table)
-
-        self._path = options["path"]
-        fsio.local_path(self._path)  # executors write with plain I/O
-        self._app = options.get("txnappid") or options.get("txnAppId") \
-            or f"iceberg_stream-{_uuid.uuid4().hex[:12]}"
-        # table format version when the SINK creates the target
-        # (r11): 3 makes every micro-batch commit assign row-lineage
+        # table format version when the SINK creates the target: 3
+        # makes every micro-batch commit assign row-lineage
         # first_row_id ranges — the lineage stream reader's input
-        self._format_version = int(
-            options.get("formatversion",
-                        options.get("formatVersion", 2)))
-        self._schema = schema
-        bad = [f.name for f in schema.fields
-               if f.dataType.typeName() not in _SINK_SIMPLE]
-        if bad:
+        options = CaseInsensitiveDict(options)
+        self._format_version = int(options.get("formatVersion", 2))
+        super().__init__(options, schema)
+
+    def _recorded_layout(self) -> list[str] | None:
+        from sling_cli_spark.sources.iceberg_py import (
+            _current_metadata, _identity_part_cols, _part_cols,
+            _spark_schema, is_iceberg_table)
+
+        if not is_iceberg_table(self._path):
+            return None
+        _, meta = _current_metadata(self._path)
+        if meta.get("format-version", 1) < 2:
             raise ValueError(
-                f"iceberg_stream sink: unsupported column types on {bad} "
-                f"(supported: {sorted(_SINK_SIMPLE)})")
-        self._part_cols: list[str] = [
-            c for c in options.get("partitionby",
-                                   options.get("partitionBy", "")).split(",")
-            if c]
-        if is_iceberg_table(self._path):
-            from sling_cli_spark.sources.iceberg_py import (
-                _identity_part_cols, _spark_schema)
-
-            _, meta = _current_metadata(self._path)
-            if meta.get("format-version", 1) < 2:
-                raise ValueError(
-                    "iceberg_stream sink: v1 targets are not supported "
-                    "(no sequence numbers)")
-            recorded = _part_cols(meta)
-            if set(recorded) - _identity_part_cols(meta):
-                raise ValueError(
-                    "iceberg_stream sink: transform partition layouts "
-                    "are not supported — use foreachBatch")
-            if self._part_cols and self._part_cols != recorded:
-                raise ValueError(
-                    f"iceberg_stream sink: partitionBy={self._part_cols} "
-                    f"!= the table's recorded layout {recorded}")
-            self._part_cols = recorded
-            cur = [f.name for f in _spark_schema(meta).fields]
-            if [f.name for f in schema.fields] != cur:
-                raise ValueError(
-                    f"iceberg_stream sink: stream columns "
-                    f"{[f.name for f in schema.fields]} != table columns "
-                    f"{cur} — evolve via foreachBatch + write_iceberg")
-        missing = [c for c in self._part_cols
-                   if c not in {f.name for f in schema.fields}]
-        if missing:
+                "iceberg_stream sink: v1 targets are not supported "
+                "(no sequence numbers)")
+        recorded = _part_cols(meta)
+        if set(recorded) - _identity_part_cols(meta):
             raise ValueError(
-                f"iceberg_stream sink: partition columns {missing} not "
-                f"in the stream schema")
+                "iceberg_stream sink: transform partition layouts "
+                "are not supported — use foreachBatch")
+        cols = [f.name for f in self._schema.fields]
+        cur = [f.name for f in _spark_schema(meta).fields]
+        if cols != cur:
+            raise ValueError(
+                f"iceberg_stream sink: stream columns {cols} != table "
+                f"columns {cur} — evolve via foreachBatch + "
+                "write_iceberg")
+        return recorded
 
-    def write(self, iterator):
-        import uuid as _uuid
-        from urllib.parse import quote
-
-        import pyarrow as pa
+    def _file_stats(self, tbl) -> dict:
+        """Per-file value bounds, so the driver writes real
+        ``lower_bounds``/``upper_bounds`` without re-reading a single
+        footer (at 1000 files/batch a driver footer sweep would be the
+        bottleneck)."""
         import pyarrow.compute as pc
-        import pyarrow.parquet as pq
 
-        from sling_cli_spark import fsio
-        from sling_cli_spark.sources.delta_py import hive_partition_str
-
-        rows = [r.asDict(recursive=True) for r in iterator]
-        if not rows:
-            return _IceSinkMsg(None, 0, 0, {})
-        base = os.path.join(fsio.local_path(self._path), "data")
-        pc_cols = self._part_cols
-        aschema = pa.schema([
-            (f.name, _arrow_type(f.dataType.typeName()))
-            for f in self._schema.fields if f.name not in pc_cols])
-        groups: dict[tuple, list[dict]] = {}
-        for r in rows:
-            groups.setdefault(
-                tuple(r[c] for c in pc_cols), []).append(r)
-        files = []
-        for key, grp in groups.items():
-            if any(v is None for v in key):
-                raise ValueError(
-                    "iceberg_stream sink: NULL partition values are "
-                    "not supported")
-            pv = {c: hive_partition_str(v) for c, v in zip(pc_cols, key)}
-            subdir = "/".join(
-                f"{c}={quote(pv[c], safe='')}" for c in pc_cols)
-            ddir = os.path.join(base, subdir) if subdir else base
-            os.makedirs(ddir, exist_ok=True)
-            rel = f"{_uuid.uuid4().hex}.parquet"
-            rel = f"{subdir}/{rel}" if subdir else rel
-            dest = os.path.join(base, rel)
-            tbl = pa.Table.from_pylist(
-                [{k: v for k, v in r.items() if k not in pc_cols}
-                 for r in grp], schema=aschema)
-            # zstd (guide §6): 20-33% fewer bytes than snappy at flat
-            # write time; see tests/test_staged_codec.py
-            pq.write_table(tbl, dest, compression="zstd")
-            bounds = {}
-            for f in self._schema.fields:
-                if f.name in pc_cols \
-                        or f.dataType.typeName() not in _SPARK_TO_BOUND:
-                    continue
-                col = tbl.column(f.name)
-                if col.null_count == len(col):
-                    continue
-                try:
-                    mm = pc.min_max(col)
-                    bounds[f.name] = (mm["min"].as_py(), mm["max"].as_py())
-                except Exception:
-                    pass
-            files.append({"rel": rel, "size": os.path.getsize(dest),
-                          "n": len(grp), "bounds": bounds,
-                          "partition": pv or None})
-        return _IceSinkMsg(None, 0, 0, {}, files=files)
-
-    def _cleanup(self, messages):
-        from sling_cli_spark import fsio
-
-        base = os.path.join(fsio.local_path(self._path), "data")
-        for m in messages:
-            if m is None:
+        bounds = {}
+        for f in self._schema.fields:
+            if f.name in self._part_cols \
+                    or f.dataType.typeName() not in _SPARK_TO_BOUND:
                 continue
-            for f in m.file_entries():
-                p = os.path.join(base, f["rel"])
-                if os.path.exists(p):
-                    os.remove(p)
+            col = tbl.column(f.name)
+            if col.null_count < len(col):
+                mm = pc.min_max(col)
+                bounds[f.name] = (mm["min"].as_py(), mm["max"].as_py())
+        return {"bounds": bounds}
 
     def _committed_batch(self, meta: dict) -> int | None:
         """Highest batch id a retained snapshot's summary records for
@@ -691,89 +413,70 @@ class _IceStreamWriter(DataSourceStreamWriter):
                 best = b if best is None else max(best, b)
         return best
 
-    def commit(self, messages, batchId) -> None:
+    def _commit_once(self, entries: list[dict], batch_id: int) -> bool:
         from sling_cli_spark import fsio
         from sling_cli_spark.sources.avro_py import read_avro
         from sling_cli_spark.sources.iceberg_py import (
-            _absolute, _commit_snapshot, _current_schema, _encode_bound,
-            _init_meta, is_iceberg_table)
+            _absolute, _commit_snapshot, _current_metadata,
+            _current_schema, _encode_bound, _init_meta, is_iceberg_table)
 
-        entries = [f for m in messages if m is not None
-                   for f in m.file_entries()]
-        shim = _SchemaShim(self._schema)
-        for _attempt in range(10):
-            reuse = None
-            if is_iceberg_table(self._path):
-                from sling_cli_spark.sources.iceberg_py import \
-                    _current_metadata
-
-                # for_write: the __base_version marker makes
-                # _commit_snapshot raise (-> this retry loop) if a
-                # concurrent committer lands between this read and the
-                # claim — committing from the stale meta would drop
-                # that snapshot (r10)
-                _, meta = _current_metadata(self._path, for_write=True)
-                # FastAppend: reuse the head's manifest-list entries
-                # verbatim — a micro-batch commit costs O(batch files),
-                # not O(table files); thousands of triggers stay flat
-                snap = next(
-                    (s for s in meta.get("snapshots") or []
-                     if s["snapshot-id"] == meta.get(
-                         "current-snapshot-id")), None)
-                if snap is not None:
-                    reuse = read_avro(snap["manifest-list"])[1]
-            else:
-                meta = _init_meta(
-                    shim, self._path, self._part_cols,
-                    format_version=getattr(self, "_format_version", 2))
-            seen = self._committed_batch(meta)
-            if seen is not None and seen >= batchId:
-                self._cleanup(messages)  # engine re-ran a committed batch
-                return
-            fid_of = {f["name"]: (str(f["id"]), f["type"])
-                      for f in (_current_schema(meta) or {}).get(
-                          "fields", [])
-                      if isinstance(f.get("type"), str)}
-            staged = []
-            for f in entries:
-                lo, hi = {}, {}
-                for col, (mn, mx) in (f.get("bounds") or {}).items():
-                    fid, t = fid_of.get(col, (None, None))
-                    if fid is None:
-                        continue
-                    try:
-                        lb, ub = _encode_bound(t, mn), _encode_bound(t, mx)
-                    except Exception:
-                        lb = ub = None
-                    if lb is not None and ub is not None:
-                        lo[fid], hi[fid] = lb, ub
-                staged.append({
-                    "file_path": _absolute(
-                        fsio.join(self._path, "data", f["rel"])),
-                    "file_format": "PARQUET",
-                    "record_count": f["n"],
-                    "file_size_in_bytes": f["size"],
-                    "partition": f.get("partition"),
-                    "lower_bounds": lo or None,
-                    "upper_bounds": hi or None,
-                })
-            try:
-                _commit_snapshot(
-                    None, self._path, meta, carried=[],
-                    staged_files=staged, reuse_manifests=reuse,
-                    operation="append",
-                    summary_extra={
-                        "streaming-app-id": self._app,
-                        "streaming-batch-id": str(int(batchId))})
-                return
-            except FileExistsError:
-                continue  # concurrent committer won; re-read and retry
-        raise FileExistsError(
-            f"iceberg_stream sink: lost the commit race 10 times at "
-            f"{self._path}")
-
-    def abort(self, messages, batchId) -> None:
-        self._cleanup(messages)
+        reuse = None
+        if is_iceberg_table(self._path):
+            # for_write: the __base_version marker makes
+            # _commit_snapshot raise (-> the retry loop) if a concurrent
+            # committer lands between this read and the claim —
+            # committing from the stale meta would drop that snapshot
+            _, meta = _current_metadata(self._path, for_write=True)
+            # FastAppend: reuse the head's manifest-list entries
+            # verbatim — a micro-batch commit costs O(batch files), not
+            # O(table files); thousands of triggers stay flat
+            snap = next(
+                (s for s in meta.get("snapshots") or []
+                 if s["snapshot-id"] == meta.get("current-snapshot-id")),
+                None)
+            if snap is not None:
+                reuse = read_avro(snap["manifest-list"])[1]
+        else:
+            meta = _init_meta(
+                _schema_shim(self._schema), self._path, self._part_cols,
+                format_version=self._format_version)
+        seen = self._committed_batch(meta)
+        if seen is not None and seen >= batch_id:
+            return False
+        fid_of = {f["name"]: (str(f["id"]), f["type"])
+                  for f in (_current_schema(meta) or {}).get("fields", [])
+                  if isinstance(f.get("type"), str)}
+        staged = []
+        for f in entries:
+            lo, hi = {}, {}
+            for col, (mn, mx) in (f.get("bounds") or {}).items():
+                fid, t = fid_of.get(col, (None, None))
+                if fid is None:
+                    continue
+                try:
+                    lb, ub = _encode_bound(t, mn), _encode_bound(t, mx)
+                except (TypeError, ValueError):
+                    # stream value type the table column cannot encode:
+                    # the file simply carries no bound for it
+                    lb = ub = None
+                if lb is not None and ub is not None:
+                    lo[fid], hi[fid] = lb, ub
+            staged.append({
+                "file_path": _absolute(
+                    fsio.join(self._path, "data", f["rel"])),
+                "file_format": "PARQUET",
+                "record_count": f["n"],
+                "file_size_in_bytes": f["size"],
+                "partition": f.get("partitionValues") or None,
+                "lower_bounds": lo or None,
+                "upper_bounds": hi or None,
+            })
+        _commit_snapshot(
+            None, self._path, meta, carried=[], staged_files=staged,
+            reuse_manifests=reuse, operation="append",
+            summary_extra={"streaming-app-id": self._app,
+                           "streaming-batch-id": str(batch_id)})
+        return True
 
 
 def register_iceberg_stream(spark) -> None:

@@ -141,10 +141,14 @@ def test_delta_sink_rechecks_txn_on_retry(spark, tmp_path):
                            T.StructField("v", T.StringType())])
     w = ds._DeltaStreamWriter({"path": t}, schema)
 
-    # stage one file for batch 0 the way an executor task would
-    row = type("R", (), {"asDict": lambda self, recursive=True:
-                         {"id": 2, "v": "b"}})()
-    msg = w.write(iter([row]))
+    # stage one file for batch 0 the way an executor task would: the
+    # sink receives Arrow record batches
+    import pyarrow as pa
+
+    batch = pa.RecordBatch.from_pylist(
+        [{"id": 2, "v": "b"}],
+        schema=pa.schema([("id", pa.int64()), ("v", pa.string())]))
+    msg = w.write(iter([batch]))
 
     # zombie twin: same appId commits batch 0 between our check and our
     # claim — simulate by making the FIRST _commit attempt lose the race

@@ -468,7 +468,8 @@ def test_delta_stream_sink_exactly_once(spark, tmp_path):
         _txn_versions, last_txn_version, latest_version, read_delta,
         write_delta)
     from sling_cli_spark.streaming.delta_source import (
-        _DeltaStreamWriter, _SinkMsg, register_delta_stream)
+        _DeltaStreamWriter, register_delta_stream)
+    from sling_cli_spark.streaming.lake_stream import _SinkMsg
 
     register_delta_stream(spark)
     src = str(tmp_path / "src")
@@ -499,11 +500,13 @@ def test_delta_stream_sink_exactly_once(spark, tmp_path):
 
     # simulate an engine re-delivery of an already-committed batch:
     # the writer must drop it (no new commit) and delete the re-write
-    w = _DeltaStreamWriter.__new__(_DeltaStreamWriter)
-    w._path, w._app = dst, "pipe-1"
+    w = _DeltaStreamWriter(
+        {"path": dst, "txnAppId": "pipe-1"},
+        spark.createDataFrame([], "id long, v string").schema)
     open(os.path.join(dst, "part-deadbeef.snappy.parquet"), "wb").close()
     v_before = latest_version(dst)
-    w.commit([_SinkMsg("part-deadbeef.snappy.parquet", 0, 0)], 1)
+    w.commit([_SinkMsg([{"rel": "part-deadbeef.snappy.parquet",
+                         "size": 0, "n": 0, "partitionValues": {}}])], 1)
     assert latest_version(dst) == v_before
     assert not os.path.exists(
         os.path.join(dst, "part-deadbeef.snappy.parquet"))
@@ -653,7 +656,8 @@ def test_iceberg_stream_sink_exactly_once_with_bounds(spark, tmp_path):
         _active_entries, _current_metadata, _decode_bound, read_iceberg,
         write_iceberg)
     from sling_cli_spark.streaming.iceberg_source import (
-        _IceSinkMsg, _IceStreamWriter, register_iceberg_stream)
+        _IceStreamWriter, register_iceberg_stream)
+    from sling_cli_spark.streaming.lake_stream import _SinkMsg
 
     register_iceberg_stream(spark)
     src = str(tmp_path / "src")
@@ -697,13 +701,14 @@ def test_iceberg_stream_sink_exactly_once_with_bounds(spark, tmp_path):
     assert (1, 2) in ids and (3, 3) in ids
 
     # simulate an engine re-delivery of an already-committed batch
-    w = _IceStreamWriter.__new__(_IceStreamWriter)
-    w._path, w._app = dst, "pipe-ice"
-    w._schema = spark.createDataFrame([], "id long, v string").schema
+    w = _IceStreamWriter(
+        {"path": dst, "txnAppId": "pipe-ice"},
+        spark.createDataFrame([], "id long, v string").schema)
     stray = os.path.join(dst, "data", "deadbeef.parquet")
     open(stray, "wb").close()
     v_before = _current_metadata(dst)[0]
-    w.commit([_IceSinkMsg("deadbeef.parquet", 0, 1, {})], 1)
+    w.commit([_SinkMsg([{"rel": "deadbeef.parquet", "size": 0, "n": 1,
+                         "partitionValues": {}}])], 1)
     assert _current_metadata(dst)[0] == v_before, "replay must not commit"
     assert not os.path.exists(stray)
     assert len(read_iceberg(spark, dst).collect()) == 3
@@ -946,6 +951,34 @@ def test_delta_stream_change_feed(spark, tmp_path):
     assert set(new) == {("delete", 1), ("delete", 3)}
 
 
+def test_delta_stream_change_feed_refuses_derived_dv_commit(
+        spark, tmp_path):
+    """Without cdc files a commit's row changes are derived from its
+    adds and removes; one that attaches a deletion vector cannot be
+    derived, and the change-feed stream refuses it as an unsupported
+    table feature."""
+    from sling_cli_spark.sources.delta_py import (
+        delete_missing_delta, set_table_properties, write_delta)
+    from sling_cli_spark.streaming.delta_source import (
+        register_delta_stream)
+
+    register_delta_stream(spark)
+    t, out, ck = (str(tmp_path / d) for d in ("t", "out", "ck"))
+    write_delta(spark.createDataFrame(
+        [(i, f"v{i}") for i in range(10)], "id long, v string")
+        .coalesce(1), t)
+    set_table_properties(t, {"delta.enableDeletionVectors": "true"})
+    stats = delete_missing_delta(spark, t, spark.createDataFrame(
+        [(i,) for i in range(10) if i != 3], "id long"), "id")
+    assert stats.get("dv_files", 0) >= 1, stats
+    with pytest.raises(Exception, match="underivable"):
+        (spark.readStream.format("delta_stream").option("path", t)
+         .option("readChangeFeed", "true").load()
+         .writeStream.format("parquet").option("path", out)
+         .option("checkpointLocation", ck)
+         .trigger(availableNow=True).start().awaitTermination())
+
+
 def test_iceberg_stream_changelog(spark, tmp_path):
     """readChangelog=true streams file-turnover row changes: a CoW
     merge emits delete rows for the touched file + insert rows for the
@@ -1007,15 +1040,12 @@ def test_delta_stream_file_and_byte_admission(spark, tmp_path):
             mode="append")
 
     def reader(**opts):
-        r = _DeltaStreamReader.__new__(_DeltaStreamReader)
-        r._path = src
-        r._ignore_changes = False
-        r._ignore_deletes = False
-        r._starting = 0
-        r._max_versions = int(opts.get("max_versions", 0)) or None
-        r._max_files = int(opts.get("max_files", 0)) or None
-        r._max_bytes = int(opts.get("max_bytes", 0)) or None
-        r._last_end = opts.get("anchor", -1)
+        r = _DeltaStreamReader({
+            "path": src,
+            "maxVersionsPerTrigger": str(opts.get("max_versions", 0)),
+            "maxFilesPerTrigger": str(opts.get("max_files", 0)),
+            "maxBytesPerTrigger": str(opts.get("max_bytes", 0))})
+        r.commit({"version": opts.get("anchor", -1)})
         return r
 
     # 2 files per trigger: anchor=-1 admits v0..v1, then v2..v3, then v4
@@ -1047,13 +1077,12 @@ def test_iceberg_stream_file_and_byte_admission(spark, tmp_path):
             [(i, "x")], "id long, v string").coalesce(1), src)
 
     def reader(**opts):
-        r = _IceStreamReader.__new__(_IceStreamReader)
-        r._path = src
-        r._starting = 0
-        r._max_snapshots = int(opts.get("max_snapshots", 0)) or None
-        r._max_files = int(opts.get("max_files", 0)) or None
-        r._max_bytes = int(opts.get("max_bytes", 0)) or None
-        r._last_end = opts.get("anchor", 0)
+        r = _IceStreamReader({
+            "path": src,
+            "maxSnapshotsPerTrigger": str(opts.get("max_snapshots", 0)),
+            "maxFilesPerTrigger": str(opts.get("max_files", 0)),
+            "maxBytesPerTrigger": str(opts.get("max_bytes", 0))})
+        r.commit({"seq": opts.get("anchor", 0)})
         return r
 
     assert reader(max_files=2, anchor=0).latestOffset() == {"seq": 2}
@@ -1085,13 +1114,8 @@ def test_delta_stream_caps_admit_through_log_holes(spark, tmp_path):
             mode="append")
     _os.remove(_os.path.join(src, "_delta_log", f"{1:020d}.json"))
 
-    r = _DeltaStreamReader.__new__(_DeltaStreamReader)
-    r._path = src
-    r._starting = 0
-    r._max_versions = None
-    r._max_files = 1
-    r._max_bytes = None
-    r._last_end = 0
+    r = _DeltaStreamReader({"path": src, "maxFilesPerTrigger": "1"})
+    r.commit({"version": 0})
     end = r.latestOffset()
     assert end["version"] >= 1, "the hole version must be admitted"
     with _pytest.raises(ValueError, match="cleaned|has"):
