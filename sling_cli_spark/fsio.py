@@ -171,6 +171,13 @@ class JvmFS:
             stream.close()
         return bytes(data)
 
+    def open_input(self, p: str) -> "_JvmInput":
+        """Seekable binary handle: reads fetch only the requested
+        ranges, so a footer read costs the tail, not the file."""
+        jp = self._Path(p)
+        return _JvmInput(self._jvm, self._jfs.open(jp),
+                         int(self._jfs.getFileStatus(jp).getLen()))
+
     def write_bytes(self, p: str, data: bytes) -> None:
         stream = self._jfs.create(self._Path(p), True)
         try:
@@ -197,6 +204,46 @@ class JvmFS:
 
     def delete(self, p: str, recursive: bool = False) -> None:
         self._jfs.delete(self._Path(p), recursive)
+
+
+class _JvmInput(io.RawIOBase):
+    """Read-only seekable file object over a Hadoop ``FSDataInputStream``."""
+
+    def __init__(self, jvm, stream, size: int):
+        self._io_utils = jvm.org.apache.commons.io.IOUtils
+        self._stream = stream
+        self._size = size
+        self._pos = 0
+
+    def readable(self) -> bool:
+        return True
+
+    def seekable(self) -> bool:
+        return True
+
+    def tell(self) -> int:
+        return self._pos
+
+    def seek(self, offset: int, whence: int = io.SEEK_SET) -> int:
+        base = {io.SEEK_SET: 0, io.SEEK_CUR: self._pos,
+                io.SEEK_END: self._size}[whence]
+        self._pos = max(0, base + offset)
+        return self._pos
+
+    def readinto(self, b) -> int:
+        n = min(len(b), self._size - self._pos)
+        if n <= 0:
+            return 0
+        self._stream.seek(self._pos)
+        data = bytes(self._io_utils.toByteArray(self._stream, n))
+        b[:n] = data
+        self._pos += n
+        return n
+
+    def close(self) -> None:
+        if not self.closed:
+            self._stream.close()
+        super().close()
 
 
 def join(base: str, *parts: str) -> str:

@@ -353,3 +353,64 @@ def write_dv_file(
     fs.write_bytes(fsio.join(d, f"deletion_vector_{u}.bin"),
                    blob.getvalue())
     return descs
+
+
+# ------------------------------------------- deleted-position frames
+
+def deleted_positions_df(spark, dvs: list[tuple[str, int, str]], decode):
+    """``(__fp string, __pos long)`` rows for every position deleted by
+    ``dvs`` — one ``(fp, cardinality, payload)`` per data file, where
+    ``decode(payload)`` returns the file's sorted deleted positions
+    (Delta descriptors and Iceberg Puffin blobs differ only there).
+
+    The metadata gives every vector's cardinality before anything is
+    decoded. When the rows fit under
+    ``spark.sql.autoBroadcastJoinThreshold`` — the anti-join would
+    broadcast them anyway — the driver decodes them into an Arrow
+    table: a local relation, no Python worker at execution. Otherwise
+    the payloads go to executors, which expand them via
+    ``mapInPandas``: a large table's vectors can hold billions of
+    positions, so the driver moves compressed bitmaps, never expanded
+    rows. A vector whose decoded size disagrees with its positive
+    cardinality fails loudly."""
+    import pyarrow as pa
+
+    threshold = spark._jsparkSession.sessionState().conf() \
+        .autoBroadcastJoinThreshold()
+    size = sum(card * (len(fp.encode()) + 8) for fp, card, _ in dvs)
+    if all(card > 0 for _, card, _ in dvs) and size <= threshold:
+        fps, poss = [], []
+        for fp, card, payload in dvs:
+            idx = _checked_positions(decode, fp, card, payload)
+            fps.append(pa.repeat(fp, len(idx)))
+            poss.append(pa.array(idx, pa.int64()))
+        return spark.createDataFrame(pa.table({
+            "__fp": pa.chunked_array(fps, pa.string()),
+            "__pos": pa.chunked_array(poss, pa.int64())}))
+
+    import pandas as pd
+
+    from sling_cli_spark.localframe import local_df
+
+    src = local_df(spark, dvs, "__fp string, __n long, __p string")
+    if len(dvs) > 1:
+        src = src.repartition(min(len(dvs), 64), "__fp")
+
+    def expand(batches):
+        for pdf in batches:
+            for fp, card, payload in zip(pdf["__fp"], pdf["__n"], pdf["__p"]):
+                idx = _checked_positions(decode, fp, card, payload)
+                step = 1 << 20  # bound per-batch memory
+                for i in range(0, len(idx), step):
+                    yield pd.DataFrame({"__fp": fp, "__pos": idx[i:i + step]})
+
+    return src.mapInPandas(expand, "__fp string, __pos long")
+
+
+def _checked_positions(decode, fp: str, card: int, payload: str):
+    idx = decode(payload)
+    if card and len(idx) != card:
+        raise ValueError(
+            f"deletion vector for {fp}: bitmap holds {len(idx)} "
+            f"positions, metadata says {card}")
+    return idx

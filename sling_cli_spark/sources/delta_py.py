@@ -68,6 +68,7 @@ from ..localframe import local_df
 from pyspark.sql import functions as F
 
 from sling_cli_spark import fsio
+from sling_cli_spark.sources.footer_stats import footer_num_rows
 
 _LOG_DIR = "_delta_log"
 
@@ -2089,21 +2090,13 @@ def _apply_deletion_vectors(
     Spark-native shape, same as the Iceberg positional-delete path
     (iceberg_py._apply_positional_deletes): ``_metadata.row_index``
     supplies each row's ordinal within its parquet file, the descriptors
-    expand to (file, row_index) rows via ``mapInPandas`` ON EXECUTORS
-    (a 100 TB table's DVs can hold billions of positions — the driver
-    ships per-file descriptor JSON, not positions), and a left-anti
-    join removes matches. DV rows are tiny next to data, so AQE
-    broadcasts the anti-join side when it fits.
+    expand to (file, row_index) rows (:func:`_dv_deleted_df` — on the
+    driver below the broadcast threshold, on executors above it), and a
+    left-anti join removes matches.
 
-    The join key is the TABLE-RELATIVE path on both sides (the log's
-    literal ``add.path`` vs ``_metadata.file_path`` with scheme +
-    authority stripped, one url-decode, and the table base removed —
-    the SQL twin of :func:`_rel_to_table`), so hdfs://-style tables
-    match exactly like local ones. For those non-local tables the
-    driver also pre-reads u/p DV files through fsio — executors run
-    plain Python with no JVM filesystem client — and ships the raw
-    bitmap blobs (MBs of compressed roaring, never expanded positions)
-    inline."""
+    The join key is the scheme-free ABSOLUTE path on both sides
+    (:func:`_abs_of_add` vs :func:`_abs_fp_col`), so hdfs://-style
+    tables and shallow clones match exactly like local ones."""
     from pyspark.sql import functions as F
 
     deleted = _dv_deleted_df(spark, path, dvs)
@@ -2185,15 +2178,14 @@ def _abs_fp_col():
 
 def _dv_deleted_df(spark, path: str, dvs: dict[str, dict]) -> DataFrame:
     """``(__fp, __pos)`` rows for every DV-deleted position of ``dvs``
-    (rel path -> descriptor), expanded on EXECUTORS via ``mapInPandas``
-    (a 100 TB table's DVs can hold billions of positions — the driver
-    ships per-file descriptor JSON, not positions). Non-local tables
-    pre-read u/p DV blobs through fsio on the driver and ship the raw
-    compressed roaring inline (executors run plain Python with no JVM
-    filesystem client)."""
+    (rel path -> descriptor): :func:`delta_dv.deleted_positions_df`
+    with the descriptor decode, keyed on each file's ABSOLUTE on-disk
+    path (shallow-cloned adds point outside the table root, where a
+    relative key cannot match). Non-local tables pre-read u/p DV blobs
+    through fsio on the driver and ship the raw compressed roaring
+    inline (executors run plain Python with no JVM filesystem
+    client)."""
     import base64
-
-    import pandas as pd
 
     from . import delta_dv
 
@@ -2201,34 +2193,23 @@ def _dv_deleted_df(spark, path: str, dvs: dict[str, dict]) -> DataFrame:
     is_uri = bool(parsed.scheme and len(parsed.scheme) > 1)
     table_ref = path if is_uri else _table_base(path)
 
-    rows = []
+    items = []
     for rel, desc in dvs.items():
         blob64 = ""
         if is_uri and desc.get("storageType") in ("u", "p"):
             p = delta_dv.dv_absolute_path(table_ref, desc)
             blob64 = base64.b64encode(
                 fsio.get_fs(p).read_bytes(p)).decode()
-        # join key = the file's ABSOLUTE on-disk path (shallow-cloned
-        # adds point outside the table root, where a relative key
-        # cannot match)
-        rows.append((_abs_of_add(path, rel), json.dumps(desc), blob64))
-    src = local_df(spark, rows, "__fp string, __dv string, __b string")
-    if len(rows) > 1:
-        src = src.repartition(min(len(rows), 64), "__fp")
+        items.append((_abs_of_add(path, rel),
+                      int(desc.get("cardinality") or 0),
+                      json.dumps([desc, blob64])))
 
-    def expand(batches):
-        for pdf in batches:
-            for fp, dvj, b64 in zip(pdf["__fp"], pdf["__dv"], pdf["__b"]):
-                idx = delta_dv.dv_indices(
-                    table_ref, json.loads(dvj),
-                    blob=base64.b64decode(b64) if b64 else None)
-                step = 1 << 20  # bound per-batch memory
-                for i in range(0, len(idx), step):
-                    yield pd.DataFrame(
-                        {"__fp": fp, "__pos": idx[i:i + step]})
+    def decode(payload: str):
+        desc, b64 = json.loads(payload)
+        return delta_dv.dv_indices(
+            table_ref, desc, blob=base64.b64decode(b64) if b64 else None)
 
-    return src.select("__fp", "__dv", "__b") \
-        .mapInPandas(expand, "__fp string, __pos long")
+    return delta_dv.deleted_positions_df(spark, items, decode)
 
 
 def _read_files_mor(
@@ -2527,11 +2508,12 @@ def _produce_dv_actions(
     (PROTOCOL.md §Deletion Vectors, Writer Requirements): each touched
     file gets remove+add on the SAME data file with a new DV descriptor
     (old DV positions unioned in — one DV per file), fully-dead files
-    become plain removes, untouched files produce nothing. The census
-    pass doubles as the touched-file probe — callers pass the WHOLE
-    candidate set rather than pre-probing (one scan, not two; measured
-    on a 9.6M-row / 16-file table, the fused path cut the sparse-delete
-    wall time below CoW while writing 917 bytes instead of 134 MB).
+    become plain removes, untouched files produce nothing. The
+    doomed-coordinates scan doubles as the touched-file probe — callers
+    pass the WHOLE candidate set rather than pre-probing (one scan, not
+    two; measured on a 9.6M-row / 16-file table, the fused path cut the
+    sparse-delete wall time below CoW while writing 917 bytes instead
+    of 134 MB).
     Returns ``(actions, n_dv, n_dead, doomed_rels)``, or None when the
     delete is dense enough (> ``max_dv_rows`` doomed positions) that a
     CoW rewrite is the better plan — the caller falls back.
@@ -2625,11 +2607,7 @@ def _add_num_records(path: str, add: dict) -> int:
             return int(json.loads(st)["numRecords"])
         except (ValueError, KeyError, TypeError):
             pass
-    import pyarrow.parquet as pq
-
-    fs = fsio.get_fs(path)
-    return pq.ParquetFile(io.BytesIO(
-        fs.read_bytes(fsio.join(path, add["path"])))).metadata.num_rows
+    return footer_num_rows(_add_uri(path, add["path"]))
 
 
 def _assign_fresh_row_ids(
@@ -3136,12 +3114,12 @@ def merge_delta(
                 and not (part_cols and _has_foreign_adds(candidates)):
             # (partitioned shallow-clone candidates stay CoW: the raw
             # position scan has no basePath to pin)
-            # DV path: the census over the pruned candidates doubles as
-            # the touched-file probe (one scan); matched rows are
-            # DV-deleted in place and the merge output (updated matched
-            # rows + inserted rows — exactly merge_dataframes over the
-            # MATCHED subset, since unmatched target rows never leave
-            # their file) appends as new files.
+            # DV path: the doomed-coordinates scan over the pruned
+            # candidates doubles as the touched-file probe (one scan);
+            # matched rows are DV-deleted in place and the merge output
+            # (updated matched rows + inserted rows — exactly
+            # merge_dataframes over the MATCHED subset, since unmatched
+            # target rows never leave their file) appends as new files.
             now = int(time.time() * 1000)
             dv = _produce_dv_actions(
                 spark, path, meta, files, sorted(candidates), pk, src,
@@ -3325,8 +3303,8 @@ def delete_missing_delta(
 
     if files and not soft and _dv_writes_enabled(meta, use_dvs) \
             and not (part_cols and _has_foreign_adds(files)):
-        # DV path: the census over ALL files doubles as the
-        # touched-file probe (one scan of the table, not two; an
+        # DV path: the doomed-coordinates scan over ALL files doubles
+        # as the touched-file probe (one scan of the table, not two; an
         # already-DV-deleted doomed row only re-unions its own
         # position — a no-op)
         now = int(time.time() * 1000)

@@ -38,7 +38,7 @@ import os
 
 from sling_cli_spark import fsio
 
-__all__ = ["staged_footer_stats"]
+__all__ = ["footer_num_rows", "staged_footer_stats"]
 
 
 def _isnan(v) -> bool:
@@ -100,6 +100,21 @@ def _file_stats(local: str) -> dict:
             entry["nulls"] = int(sum(nulls))
         out[name] = entry
     return {"num_rows": md.num_rows, "cols": out}
+
+
+def footer_num_rows(path: str) -> int:
+    """Physical row count of the parquet file at ``path``, read from its
+    footer alone: ``pq.read_metadata`` on a local path, else over a
+    seekable fsio handle, so only the footer tail is fetched either way
+    (never the whole file)."""
+    import pyarrow.parquet as pq
+
+    try:
+        local = fsio.local_path(path)
+    except ValueError:
+        with fsio.get_fs(path).open_input(path) as f:
+            return pq.read_metadata(f).num_rows
+    return pq.read_metadata(local).num_rows
 
 
 def staged_footer_stats(tmp: str) -> dict[str, dict] | None:

@@ -67,11 +67,13 @@ from ..localframe import local_df
 
 from sling_cli_spark import fsio
 from sling_cli_spark.sources.avro_py import read_avro, write_avro
+from sling_cli_spark.sources.footer_stats import footer_num_rows
 from sling_cli_spark.sources.delta_py import (
     _HIVE_NULL, UnsupportedTableFeature, hive_partition_str)
 
 _SPARK_TO_ICE = {
-    "long": "long", "integer": "int", "double": "double", "float": "float",
+    "long": "long", "integer": "int", "short": "int", "byte": "int",
+    "double": "double", "float": "float",
     "string": "string", "boolean": "boolean", "binary": "binary",
     "date": "date", "timestamp": "timestamptz", "timestamp_ntz": "timestamp",
 }
@@ -175,6 +177,8 @@ _MANIFEST_ENTRY_SCHEMA_V3 = _MANIFEST_ENTRY_SCHEMA_V2
 # absent and readers derive first_row_id + position. Writer-internal:
 # never part of the table schema, stripped from plain reads.
 _LINEAGE_COLS = ("_row_id", "_last_updated_sequence_number")
+#: the columns of a position delete file (spec §Position Delete Files)
+_POS_DELETE_SCHEMA = "file_path string, pos long"
 
 
 def _bounds_map(v):
@@ -627,15 +631,13 @@ def _spark_schema(meta: dict):
 
 
 def _parse_ddl_type(name: str):
+    """Atomic type name (incl. ``decimal(p, s)``) -> Spark DataType. The
+    pure-Python JSON-name parser covers every name this module
+    generates and needs no JVM round trip — every read definition
+    builds the table schema, one field at a time."""
     from pyspark.sql import types as T
 
-    try:
-        return T._parse_datatype_string(name)
-    except Exception:
-        # no active SparkContext (a Python DataSource worker resolving
-        # the stream schema): the pure JSON-name parser covers every
-        # atomic name this module generates, incl. decimal(p, s)
-        return T._parse_datatype_json_value(name.replace(" ", ""))
+    return T._parse_datatype_json_value(name.replace(" ", ""))
 
 
 def _active_entries(
@@ -759,6 +761,7 @@ def _apply_equality_deletes(
     from functools import reduce
 
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
     # resolve field ids against the CURRENT schema (spec: current-schema-id
     # picks from schemas[]; names from an older schema would be wrong
@@ -767,6 +770,7 @@ def _apply_equality_deletes(
     if current is None:
         raise UnsupportedTableFeature("iceberg metadata carries no schema")
     id_to_name = {f["id"]: f["name"] for f in current["fields"]}
+    types = {f.name: f.dataType for f in _spark_schema(meta).fields}
 
     seq_rows = [(_canon(f["file_path"]), int(f["__seq"] or 0))
                 for f in data_files]
@@ -802,7 +806,9 @@ def _apply_equality_deletes(
                 raise UnsupportedTableFeature(
                     "equality delete file without a sequence number")
             branches.append(
-                spark.read.parquet(d["file_path"]).select(*cols)
+                spark.read.schema(T.StructType(
+                    [T.StructField(c, types[c]) for c in cols]))
+                .parquet(d["file_path"])
                 .withColumn("__dseq", F.lit(int(d["__seq"]))))
         dd = branches[0]
         for b in branches[1:]:
@@ -837,34 +843,30 @@ def _apply_positional_deletes(spark, df: DataFrame, deletes: list[dict]):
         (dvs if fmt == "PUFFIN" else parq).append(f)
     right = None
     if parq:
-        dd = spark.read.parquet(*[f["file_path"] for f in parq])
+        dd = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
+            *[f["file_path"] for f in parq])
         right = dd.select(_norm_path_col(F.col("file_path")).alias("__fp"),
                           F.col("pos").alias("__pos"))
     if dvs:
-        dv_rows = _expand_dvs(spark, dvs)
+        dv_rows = _dv_deleted_df(spark, dvs)
         right = dv_rows if right is None else right.unionByName(dv_rows)
     return df.join(right, ["__fp", "__pos"], "left_anti").drop("__pos")
 
 
-def _expand_dvs(spark, dvs: list[dict]) -> DataFrame:
-    """v3 deletion-vector entries -> a (__fp, __pos) DataFrame.
-
-    The driver reads each Puffin delete file ONCE through fsio (they
-    are tiny next to data; entries sharing a file share the read),
-    slices each blob by the manifest's ``content_offset``/
-    ``content_size_in_bytes``, and ships the compressed roaring bytes
-    to executors, which expand positions via ``mapInPandas`` — a 100 TB
-    table's vectors can hold billions of positions, so the driver moves
-    MBs of bitmap, never expanded rows. Same shape as
-    delta_py._apply_deletion_vectors."""
+def _dv_deleted_df(spark, dvs: list[dict]) -> DataFrame:
+    """v3 deletion-vector entries -> a (__fp, __pos) DataFrame:
+    :func:`delta_dv.deleted_positions_df` with the Puffin blob decode
+    and the manifest's ``record_count`` as the cardinality. The driver
+    reads each Puffin delete file ONCE through fsio (they are tiny next
+    to data; entries sharing a file share the read) and slices each
+    blob by the manifest's ``content_offset``/``content_size_in_bytes``."""
     import base64
 
-    import pandas as pd
-
     from sling_cli_spark.sources import puffin
+    from sling_cli_spark.sources.delta_dv import deleted_positions_df
 
     file_bytes: dict[str, bytes] = {}
-    rows = []
+    items = []
     for d in dvs:
         ref = d.get("referenced_data_file")
         if not ref:
@@ -883,25 +885,11 @@ def _expand_dvs(spark, dvs: list[dict]) -> DataFrame:
             raise ValueError(
                 f"puffin blob at {p}:{off} truncated "
                 f"({len(blob)} of {size} bytes)")
-        rows.append((_canon(ref), base64.b64encode(blob).decode(),
-                     int(d.get("record_count") or 0)))
-    src = local_df(spark, rows, "__fp string, __b string, __n long")
-    if len(rows) > 1:
-        src = src.repartition(min(len(rows), 64), "__fp")
-
-    def expand(batches):
-        for pdf in batches:
-            for fp, b64, card in zip(pdf["__fp"], pdf["__b"], pdf["__n"]):
-                idx = puffin.dv_blob_indices(base64.b64decode(b64))
-                if card and len(idx) != card:
-                    raise ValueError(
-                        f"deletion vector for {fp}: bitmap holds "
-                        f"{len(idx)} positions, manifest says {card}")
-                step = 1 << 20  # bound per-batch memory
-                for i in range(0, len(idx), step):
-                    yield pd.DataFrame({"__fp": fp, "__pos": idx[i:i + step]})
-
-    return src.mapInPandas(expand, "__fp string, __pos long")
+        items.append((_canon(ref), int(d.get("record_count") or 0),
+                      base64.b64encode(blob).decode()))
+    return deleted_positions_df(
+        spark, items,
+        lambda b64: puffin.dv_blob_indices(base64.b64decode(b64)))
 
 
 def _initial_defaults(meta: dict) -> dict[str, tuple]:
@@ -924,7 +912,7 @@ def _fill_initial_defaults(df, files: list[dict], defaults: dict):
     The footer probe (pyarrow, driver-side, one tiny read per file)
     runs ONLY when the current schema actually carries defaults —
     tables without them never pay it. A column absent from EVERY file
-    appends as a constant (mergeSchema would not surface it at all)."""
+    reads the default on every row."""
     import pyarrow.parquet as pq
     from pyspark.sql import functions as F
 
@@ -947,61 +935,11 @@ def _fill_initial_defaults(df, files: list[dict], defaults: dict):
         st = spark_type[ice_t] if not str(ice_t).startswith("decimal") \
             else str(ice_t)
         lit = F.lit(val).cast(st)
-        if name not in df.columns:
-            df = df.withColumn(name, lit)
-        elif name in missing:
+        if name in missing:
             df = df.withColumn(
                 name, F.when(F.col("__fp").isin(missing[name]), lit)
                 .otherwise(F.col(name)))
     return df
-
-
-# driver-side footer probe cap for _merge_schema_reader: above this
-# many files the distributed footer merge amortizes its job cost and
-# serial driver reads would not (guide §5 — the driver does O(small)
-# work only)
-_FOOTER_PROBE_MAX = 32
-
-
-def _merge_schema_reader(spark, paths: list[str]):
-    """A parquet reader over ``paths`` with mergeSchema SEMANTICS.
-
-    ``mergeSchema=true`` runs a distributed footer-merge job at read
-    DEFINITION time — measured ~0.10 s of driver wait per call
-    regardless of data size, and iceberg operators build several such
-    reads per call. When every footer carries the IDENTICAL parquet
-    schema, the merge is the identity, and Spark's default inference
-    (first footer, driver-side) returns the same schema with no job —
-    so probe cheaply first: a single file is trivially uniform, and up
-    to ``_FOOTER_PROBE_MAX`` local files are compared by their raw
-    parquet schema (physical + logical types — stricter than the
-    Spark-visible schema, never wrong). Non-local paths, bigger sets,
-    diverse footers, or probe failures keep the distributed merge
-    (guide §1.2: remove the job only when provably redundant)."""
-    if len(paths) > 1 and not _footers_uniform(paths):
-        return spark.read.option("mergeSchema", "true")
-    return spark.read
-
-
-def _footers_uniform(paths: list[str]) -> bool:
-    """True when every footer carries the identical raw parquet schema
-    (so a mergeSchema union would be the identity). False on non-local
-    paths, sets above ``_FOOTER_PROBE_MAX``, or any probe failure."""
-    if len(paths) > _FOOTER_PROBE_MAX:
-        return False
-    try:
-        import pyarrow.parquet as pq
-
-        first = None
-        for p in paths:
-            s = pq.read_metadata(fsio.local_path(p)).schema
-            if first is None:
-                first = s
-            elif not first.equals(s):
-                return False
-        return True
-    except Exception:
-        return False
 
 
 def _mor_read(
@@ -1011,10 +949,17 @@ def _mor_read(
     with_row_ids: bool = False,
 ) -> DataFrame:
     """Scan a set of data-file entries with the snapshot's delete files
-    applied merge-on-read. ``_metadata.file_path`` / ``row_index`` are
-    captured into ``__fp``/``__pos`` ONCE, directly on the scan (they do
-    not resolve after a join), then shared by the positional anti-join,
-    the equality sequence map, the v3 initial-default fill, and
+    applied merge-on-read. Every parquet scan carries the table's
+    current schema (:func:`_spark_schema`), so defining the read runs
+    no footer-inference job: files written before a column was added
+    read it as null, promoted columns (int -> long, float -> double)
+    read as the promoted type, and columns outside the schema (e.g.
+    materialized lineage ids) stay out.
+
+    ``_metadata.file_path`` / ``row_index`` are captured into
+    ``__fp``/``__pos`` ONCE, directly on the scan (they do not resolve
+    after a join), then shared by the positional anti-join, the
+    equality sequence map, the v3 initial-default fill, and
     (``keep_file_col=True``) the caller's touched-file detection via
     ``__file``.
 
@@ -1032,14 +977,14 @@ def _mor_read(
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
+    lineage = [T.StructField(c, T.LongType()) for c in _LINEAGE_COLS] \
+        if with_row_ids else []
     if not files:
         sch = empty_schema or _spark_schema(meta)
-        if with_row_ids:
-            sch = T.StructType(list(sch.fields) + [
-                T.StructField(c, T.LongType()) for c in _LINEAGE_COLS])
-        df = local_df(spark, [], sch)
+        df = local_df(spark, [], T.StructType(list(sch.fields) + lineage))
         return df.withColumn("__file", F.lit(None).cast("string")) \
             if keep_file_col else df
+    schema = T.StructType(list(_spark_schema(meta).fields) + lineage)
     defaults = _initial_defaults(meta) \
         if meta.get("format-version", 1) >= 3 else {}
     need_fp = keep_file_col or bool(pos_dels) or bool(eq_dels) \
@@ -1060,11 +1005,11 @@ def _mor_read(
         # dir inference cannot span them, so union one branch per
         # distinct partition tuple with the manifests' values attached
         df = _grouped_partition_read(
-            spark, meta, files, need_fp,
+            spark, files, schema, need_fp,
             need_pos=bool(pos_dels) or with_row_ids)
     else:
         fpaths = sorted(f["file_path"] for f in files)
-        reader = _merge_schema_reader(spark, fpaths)
+        reader = spark.read.schema(schema)
         shape = next(iter(shapes))
         identity = {f["name"] for s in meta.get("partition-specs") or []
                     for f in (s.get("fields") or [])
@@ -1091,14 +1036,6 @@ def _mor_read(
                     reader = reader.option("basePath", base)
                     break
         df = reader.parquet(*fpaths)
-        if shape:
-            # dir inference types partition columns from their string
-            # values (int for "10"); the table schema is authoritative
-            # (a long column must not come back int)
-            types = {f.name: f.dataType for f in _spark_schema(meta).fields}
-            for c in sorted(shape):
-                if c in types and c in df.columns:
-                    df = df.withColumn(c, F.col(c).cast(types[c]))
         if need_fp:
             df = df.withColumn(
                 "__fp", _norm_path_col(F.col("_metadata.file_path")))
@@ -1112,23 +1049,14 @@ def _mor_read(
               int(f.get("__seq") or 0)) for f in files],
             "__fp string, __frid long, __fseq long")
         df = df.join(F.broadcast(fmap), "__fp", "left")
-        rid = F.col("__frid") + F.col("__pos")
-        seq = F.when(F.col("__frid").isNotNull(), F.col("__fseq"))
-        if "_row_id" in df.columns:
-            rid = F.coalesce(F.col("_row_id"), rid)
-        if "_last_updated_sequence_number" in df.columns:
-            seq = F.coalesce(
-                F.col("_last_updated_sequence_number"), seq)
+        rid = F.coalesce(F.col("_row_id"), F.col("__frid") + F.col("__pos"))
+        seq = F.coalesce(
+            F.col("_last_updated_sequence_number"),
+            F.when(F.col("__frid").isNotNull(), F.col("__fseq")))
         df = df.withColumn("_row_id", rid.cast("long")) \
             .withColumn("_last_updated_sequence_number",
                         seq.cast("long")) \
             .drop("__frid", "__fseq")
-    else:
-        # a rewrite materialized lineage columns into some data files —
-        # mergeSchema would otherwise leak them into plain reads
-        stray = [c for c in _LINEAGE_COLS if c in df.columns]
-        if stray:
-            df = df.drop(*stray)
     if defaults:
         df = _fill_initial_defaults(df, files, defaults)
     if pos_dels:
@@ -1150,21 +1078,22 @@ def _mor_read(
 
 
 def _grouped_partition_read(
-    spark, meta: dict, files: list[dict], need_fp: bool,
+    spark, files: list[dict], schema, need_fp: bool,
     need_pos: bool = False,
 ) -> DataFrame:
     """Scan for a snapshot whose files span MULTIPLE partition layouts
-    (spec §Partition Evolution): one plain parquet branch per distinct
-    partition TUPLE, identity partition values attached as typed
-    literals from the manifests (the log already holds them — no dir
-    inference), unioned by name with nulls where a branch's files
-    predate a column. ``__fp``/``__pos`` are captured per branch —
-    metadata columns do not resolve through a union. The plan grows
-    with distinct partition tuples in the snapshot, the same bound as
-    delta_py's mapped-partitioned read."""
+    (spec §Partition Evolution): one parquet branch per distinct
+    partition TUPLE, reading ``schema`` minus the identity partition
+    columns, whose values attach as typed literals from the manifests
+    (the log already holds them — no dir inference); branches union by
+    name. ``__fp``/``__pos`` are captured per branch — metadata columns
+    do not resolve through a union. The plan grows with distinct
+    partition tuples in the snapshot, the same bound as delta_py's
+    mapped-partitioned read."""
     from pyspark.sql import functions as F
+    from pyspark.sql import types as T
 
-    types = {f.name: f.dataType for f in _spark_schema(meta).fields}
+    types = {f.name: f.dataType for f in schema.fields}
     groups: dict[tuple, list[dict]] = {}
     for f in files:
         key = tuple(sorted((f.get("partition") or {}).items()))
@@ -1173,19 +1102,21 @@ def _grouped_partition_read(
     for key, grp in sorted(groups.items(),
                            key=lambda kv: tuple(map(str, kv[0]))):
         gpaths = sorted(g["file_path"] for g in grp)
-        df = _merge_schema_reader(spark, gpaths).parquet(*gpaths)
+        attached = {name: val for name, val in key if name in types}
+        df = spark.read.schema(T.StructType(
+            [f for f in schema.fields if f.name not in attached])) \
+            .parquet(*gpaths)
         if need_fp:
             df = df.withColumn(
                 "__fp", _norm_path_col(F.col("_metadata.file_path")))
         if need_pos:
             df = df.withColumn("__pos", F.col("_metadata.row_index"))
-        for name, val in key:
-            if name in types and name not in df.columns:
-                df = df.withColumn(name, F.lit(val).cast(types[name]))
+        for name, val in attached.items():
+            df = df.withColumn(name, F.lit(val).cast(types[name]))
         branches.append(df)
     out = branches[0]
     for b in branches[1:]:
-        out = out.unionByName(b, allowMissingColumns=True)
+        out = out.unionByName(b)
     return out
 
 
@@ -1291,11 +1222,10 @@ def read_iceberg(
     as_of_timestamp_ms: int | None = None, skip_filters=None,
     ref: str | None = None, with_row_ids: bool = False,
 ) -> DataFrame:
-    """Scan the current (or a specific) snapshot. ``mergeSchema`` unions
-    the footers so files predating an evolved column (e.g. the
-    soft-delete op column) read it as null — the spec's read-time
-    projection semantics. (Unlike delta_py, the v1 JSON schema here is
-    lossy for nested Spark types, so footers stay authoritative.)
+    """Scan the current (or a specific) snapshot. The scan carries the
+    table's current schema, so defining it runs no Spark job, and files
+    predating an evolved column (e.g. the soft-delete op column) read
+    it as null — the spec's read-time projection semantics.
     v2 tables' positional AND equality delete files are applied
     merge-on-read (_apply_positional_deletes /
     _apply_equality_deletes). ``as_of_timestamp_ms`` time-travels to
@@ -3301,11 +3231,12 @@ def iceberg_position_deletes(
     for f in pos_dels:
         fmt = (f.get("file_format") or "PARQUET").upper()
         if fmt == "PUFFIN":
-            rows = _expand_dvs(spark, [f]).select(
+            rows = _dv_deleted_df(spark, [f]).select(
                 F.col("__fp").alias("file_path"),
                 F.col("__pos").cast("long").alias("pos"))
         else:
-            rows = spark.read.parquet(f["file_path"]).select(
+            rows = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
+                f["file_path"]).select(
                 _norm_path_col(F.col("file_path")).alias("file_path"),
                 F.col("pos").cast("long").alias("pos"))
         branches.append(
@@ -4347,11 +4278,12 @@ def _raw_position_scan_ice(spark, path: str, meta: dict,
     """Raw (NOT delete-applied) scan of data-file entries with each
     row's physical coordinates ``__fp`` (canonical path) / ``__pos``
     (``_metadata.row_index``) — the coordinate space deletion vectors
-    address. Mirrors :func:`_mor_read`'s reader options."""
+    address. Reads with the table schema and ``basePath`` like
+    :func:`_mor_read`, so defining it runs no Spark job."""
     from pyspark.sql import functions as F
 
     epaths = sorted(f["file_path"] for f in entries)
-    reader = _merge_schema_reader(spark, epaths)
+    reader = spark.read.schema(_spark_schema(meta))
     part = _part_cols(meta)
     if part and set(part) <= _identity_part_cols(meta):
         reader = reader.option(
@@ -4428,14 +4360,7 @@ def _produce_dvs_ice(
         # (spec: "Number of records in this file"); footer fallback
         # when a foreign writer omitted it
         n = int(by_fp[fp].get("record_count") or 0)
-        if n > 0:
-            return n
-        import io as _io
-
-        import pyarrow.parquet as pq
-
-        return pq.ParquetFile(_io.BytesIO(
-            fsio.get_fs(fp).read_bytes(fp))).metadata.num_rows
+        return n if n > 0 else footer_num_rows(fp)
 
     # merge existing DV positions (one DV per file: the new vector
     # supersedes the old, which must not carry forward)
@@ -4670,12 +4595,13 @@ def iceberg_changelog(
                 if (d.get("file_format") or "PARQUET").upper() != "PUFFIN"]
         dvs = [d for d in dels if d not in parq]
         if parq:
-            dd = spark.read.parquet(*[d["file_path"] for d in parq])
+            dd = spark.read.schema(_POS_DELETE_SCHEMA).parquet(
+                *[d["file_path"] for d in parq])
             sides.append(dd.select(
                 _norm_path_col(F.col("file_path")).alias("__fp"),
                 F.col("pos").alias("__pos")))
         if dvs:
-            sides.append(_expand_dvs(spark, dvs))
+            sides.append(_dv_deleted_df(spark, dvs))
         if not sides:
             return None
         return reduce(lambda a, b: a.unionByName(b), sides)

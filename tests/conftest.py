@@ -1,5 +1,8 @@
+import contextlib
 import os
 import sys
+import types
+import uuid
 
 import pytest
 
@@ -14,6 +17,30 @@ def spark():
 
     spark = get_spark("tests", master="local[4]", shuffle_partitions=4)
     yield spark
+
+
+@pytest.fixture
+def spark_jobs(spark):
+    """``with spark_jobs() as jobs: ...`` counts the Spark jobs the block
+    submits (``jobs.count``), through the job group the block runs
+    under and ``statusTracker``."""
+    sc = spark.sparkContext
+
+    @contextlib.contextmanager
+    def count():
+        group = f"spark-jobs-{uuid.uuid4().hex}"
+        box = types.SimpleNamespace(count=None)
+        sc.setJobGroup(group, group)
+        try:
+            yield box
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+            # job starts reach the tracker through the listener bus
+            sc._jsc.sc().listenerBus().waitUntilEmpty()
+            box.count = len(sc.statusTracker().getJobIdsForGroup(group))
+
+    return count
 
 
 @pytest.fixture(scope="session")

@@ -109,40 +109,3 @@ def test_doomed_coords_no_hits(spark, delta_table):
     assert D._produce_dv_actions(
         spark, delta_table, meta, files, sorted(files), ["k"], keys,
         True, 0) == ([], 0, 0, [])
-
-
-def test_merge_schema_reader_probe(spark, tmp_path):
-    """Uniform local footers skip the mergeSchema option; diverse
-    footers (schema evolution) keep it, and the evolved read still
-    unions the columns with nulls where a file predates one."""
-    from sling_cli_spark.sources.iceberg_py import (
-        _footers_uniform, _merge_schema_reader)
-
-    a = str(tmp_path / "a")
-    b = str(tmp_path / "b")
-    c = str(tmp_path / "c")
-    spark.range(3).select(F.col("id").alias("x")).coalesce(1) \
-        .write.parquet(a)
-    spark.range(3).select(F.col("id").alias("x")).coalesce(1) \
-        .write.parquet(b)
-    spark.range(3).select(F.col("id").alias("x"),
-                          F.lit("y").alias("y")).coalesce(1) \
-        .write.parquet(c)
-    import glob
-    fa = glob.glob(a + "/*.parquet")[0]
-    fb = glob.glob(b + "/*.parquet")[0]
-    fc = glob.glob(c + "/*.parquet")[0]
-
-    # uniform: the probe proves the merge redundant, values unchanged
-    assert _footers_uniform([fa, fb])
-    assert _merge_schema_reader(spark, [fa, fb]).parquet(fa, fb) \
-        .count() == 6
-
-    # diverse (schema evolution): the merge stays and fills nulls
-    assert not _footers_uniform([fa, fc])
-    df = _merge_schema_reader(spark, [fa, fc]).parquet(fa, fc)
-    assert set(df.columns) == {"x", "y"}
-    assert df.filter("y IS NULL").count() == 3
-
-    # non-local path: probe declines, merge stays
-    assert not _footers_uniform([fa, "s3://bucket/x.parquet"])

@@ -110,3 +110,30 @@ def test_iceberg_footer_stats_match_spark_job(
 def test_footer_stats_non_local_scheme_falls_back():
     """A non-local scheme returns None -> callers run the Spark job."""
     assert FS.staged_footer_stats("s3a://bucket/stage") is None
+
+
+def test_footer_num_rows_reads_only_the_footer(spark, tmp_path, monkeypatch):
+    """Row counts come from the footer alone: no whole-file read on a
+    local path, and a ranged read through a seekable JVM file handle
+    otherwise (a file: URI forced down that path stands in for a
+    remote store)."""
+    import glob
+
+    from sling_cli_spark import fsio
+
+    spark.range(123).coalesce(1).write.parquet(str(tmp_path / "p"))
+    f = glob.glob(str(tmp_path / "p" / "*.parquet"))[0]
+
+    def whole_file(self, p):
+        raise AssertionError(f"whole-file read of {p}")
+
+    monkeypatch.setattr(fsio.LocalFS, "read_bytes", whole_file)
+    monkeypatch.setattr(fsio.JvmFS, "read_bytes", whole_file)
+    assert FS.footer_num_rows(f) == 123
+    assert FS.footer_num_rows("file://" + f) == 123
+
+    def not_local(path):
+        raise ValueError(path)
+
+    monkeypatch.setattr(fsio, "local_path", not_local)
+    assert FS.footer_num_rows("file://" + f) == 123
