@@ -68,15 +68,17 @@ from ..localframe import local_df
 from pyspark.sql import functions as F
 
 from sling_cli_spark import fsio
-from sling_cli_spark.sources.footer_stats import footer_num_rows
+from sling_cli_spark.sources.footer_stats import (
+    HIVE_NULL as _HIVE_NULL, canon_path, footer_num_rows,
+    hive_partition_values as _partition_values, staged_stats)
+from sling_cli_spark.sources.lake_core import (  # noqa: F401 (public kernel)
+    RID, SEQ, attach_preserved, bounds_disprove, doomed_positions,
+    fold_dv_rows, partition_value_disprove, prune_files, touched_files)
 
 _LOG_DIR = "_delta_log"
 
 #: write a parquet checkpoint every N commits (delta-spark default: 10)
 CHECKPOINT_INTERVAL = 10
-
-_HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
-
 
 def _log_dir(path: str) -> str:
     return fsio.join(path, _LOG_DIR)
@@ -1304,31 +1306,7 @@ def hive_partition_str(v) -> str:
     return str(v)
 
 
-def _partition_values(rel_dir: str) -> dict[str, str]:
-    """'k1=v1/k2=v2' -> {'k1': 'v1', ...} (URL-unescaped, Hive layout)."""
-    out: dict[str, str] = {}
-    for seg in rel_dir.split("/"):
-        if "=" in seg:
-            k, _, v = seg.partition("=")
-            out[k] = unquote(v)
-    return out
-
-
 _STATS_MAX_COLS = 32  # delta's dataSkippingNumIndexedCols default
-
-
-def _naive_utc(v):
-    """Normalize a datetime to NAIVE UTC — the serialization instant
-    both stats paths must agree on (ADVICE r14): footer stats already
-    arrive naive-UTC; a Spark-job ``collect()`` returns naive OS-LOCAL
-    datetimes, which on a non-UTC host would record shifted bounds."""
-    import datetime
-
-    if isinstance(v, datetime.datetime):
-        if v.tzinfo is None:
-            v = v.astimezone()  # attach the OS tz (same instant)
-        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
-    return v
 
 
 def _stats_serializable(v):
@@ -1367,146 +1345,59 @@ def _collated_cols(meta: dict | None) -> set[str]:
                    for k in (f.get("metadata") or {}))}
 
 
-def _footer_delta_stats(
-    footer: dict[str, dict], coltypes: list[tuple[str, str]],
-) -> dict[str, str]:
-    """Footer-derived add.stats (the zero-extra-job fast path of
-    :func:`_staged_stats`): data columns come straight from the parquet
-    footers (exact-or-absent — see footer_stats.py); partition columns
-    are synthesized from the Hive dir value, which is EXACT by
-    construction (every row in the file holds that literal value), for
-    the types whose dir rendering parses back losslessly. A NaN bound
-    (parquet records NaN into max exactly like Spark's ``max``) is
-    omitted, matching the Spark-job path."""
-    import datetime as _dt
-    import math
-
-    def _nan(x):
-        return isinstance(x, float) and math.isnan(x)
-
-    def _from_dir(tn: str, raw: str):
-        if tn == "string":
-            return raw
-        if tn in ("long", "integer", "short", "byte"):
-            return int(raw)
-        if tn == "date":
-            return _dt.date.fromisoformat(raw)
-        if tn == "boolean":
-            return raw == "true"
-        if tn in ("double", "float"):
-            return float(raw)
-        if tn in ("timestamp", "timestamp_ntz"):
-            return _dt.datetime.fromisoformat(raw)
-        raise ValueError(tn)
-
-    out: dict[str, str] = {}
-    for key, fst in footer.items():
-        if fst["num_rows"] == 0:
-            out[key] = json.dumps({"numRecords": 0})
-            continue
-        pvals = _partition_values(fst["rel_dir"])
-        mins, maxs, nulls = {}, {}, {}
-        for c, tn in coltypes:
-            ent = fst["cols"].get(c)
-            if ent is not None:
-                mn, mx = ent.get("mn"), ent.get("mx")
-                if mn is not None and not _nan(mn) and not _nan(mx):
-                    mins[c] = _stats_serializable(mn)
-                    maxs[c] = _stats_serializable(mx)
-                if "nulls" in ent:
-                    nulls[c] = ent["nulls"]
-            elif c in pvals:
-                raw = pvals[c]
-                if raw == "__HIVE_DEFAULT_PARTITION__":
-                    nulls[c] = fst["num_rows"]
-                    continue
-                nulls[c] = 0
-                try:
-                    v = _from_dir(tn, raw)
-                except (ValueError, TypeError):
-                    continue  # unparseable rendering: bounds omitted
-                if not _nan(v):
-                    mins[c] = maxs[c] = _stats_serializable(v)
-        out[key] = json.dumps({
-            "numRecords": fst["num_rows"], "minValues": mins,
-            "maxValues": maxs, "nullCount": nulls})
-    return out
+#: the column types whose bounds ``add.stats`` records. Decimals are
+#: deliberately EXCLUDED: serializing them as float can collapse >2^53
+#: values onto one double, and a collapsed bound could wrongly
+#: disprove a watermark — conservative no-stats beats that
+_STATS_TYPES = ("long", "integer", "short", "byte", "double", "float",
+                "string", "date", "timestamp", "timestamp_ntz", "boolean")
 
 
-def _staged_stats(
+def _add_stats_json(
     df: DataFrame, tmp: str, exclude: set[str] | None = None,
 ) -> dict[str, str]:
-    """Per-staged-file skipping stats (PROTOCOL.md Per-file Statistics:
-    numRecords / minValues / maxValues / nullCount over the first
-    ``_STATS_MAX_COLS`` atomic columns), keyed by canonical staged
-    path. Served from the freshly written parquet FOOTERS when the
-    stage is on a local filesystem (no extra job — the writer already
-    computed them; re-reading 100% of staged bytes to recompute stats
-    is exactly the re-scan guide §6 warns about); otherwise ONE Spark
-    job over the just-written files. Failure degrades to no stats,
-    never a failed commit. ``exclude`` drops columns whose bounds must
-    not be recorded (collated strings: binary min/max can disagree with
-    the collation's ordering)."""
-    from pyspark.sql import functions as F
-
-    # decimals are deliberately EXCLUDED: serializing them as float can
-    # collapse >2^53 values onto one double, and a collapsed bound could
-    # wrongly disprove a watermark — conservative no-stats beats that
-    coltypes = [(f.name, f.dataType.typeName()) for f in df.schema.fields
-                if f.name not in (exclude or ())
-                and f.dataType.typeName() in (
-                    "long", "integer", "short", "byte", "double", "float",
-                    "string", "date", "timestamp", "timestamp_ntz",
-                    "boolean")][:_STATS_MAX_COLS]
-    cols = [c for c, _ in coltypes]
-    if not cols:
-        return {}
-    from sling_cli_spark.sources.footer_stats import staged_footer_stats
-
-    footer = staged_footer_stats(tmp)
-    if footer is not None:
-        return _footer_delta_stats(footer, coltypes)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, c in enumerate(cols):
-        col = F.col(f"`{c}`")
-        aggs += [F.min(col).alias(f"__mn{i}"),
-                 F.max(col).alias(f"__mx{i}"),
-                 F.count(F.when(col.isNull(), 1)).alias(f"__nl{i}")]
-    try:
-        rows = (df.sparkSession.read.parquet(tmp)
-                .groupBy(F.col("_metadata.file_path").alias("__fp"))
-                .agg(*aggs).collect())
-    except Exception:
-        return {}
+    """``add.stats`` JSON per staged file (PROTOCOL.md Per-file
+    Statistics: numRecords / minValues / maxValues / nullCount over the
+    first ``_STATS_MAX_COLS`` atomic columns), keyed by canonical
+    staged path — :func:`footer_stats.staged_stats` encoded. A NaN
+    bound (a NaN in the file surfaces as max) is OMITTED, per the spec:
+    a recorded NaN would disprove every comparison downstream.
+    ``exclude`` drops columns whose bounds must not be recorded
+    (collated strings: binary min/max can disagree with the
+    collation's ordering)."""
     import math
 
     def _nan(x):
         return isinstance(x, float) and math.isnan(x)
 
+    cols = [f.name for f in df.schema.fields
+            if f.name not in (exclude or ())
+            and f.dataType.typeName() in _STATS_TYPES][:_STATS_MAX_COLS]
+    if not cols:
+        return {}
     out: dict[str, str] = {}
-    for r in rows:
+    for key, st in staged_stats(df, tmp, cols).items():
+        if not st["num_rows"]:
+            out[key] = json.dumps({"numRecords": 0})
+            continue
         mins, maxs, nulls = {}, {}, {}
-        for i, c in enumerate(cols):
-            # collect() timestamps are naive OS-local — normalize to the
-            # naive-UTC instant the footer path records (ADVICE r14)
-            mn, mx = _naive_utc(r[f"__mn{i}"]), _naive_utc(r[f"__mx{i}"])
-            # a NaN bound (Spark sorts NaN greatest, so any NaN in the
-            # file surfaces as max) must be OMITTED, per the spec — a
-            # recorded NaN would disprove every comparison downstream
+        for c in cols:
+            ent = st["cols"].get(c) or {}
+            mn, mx = ent.get("mn"), ent.get("mx")
             if mn is not None and not _nan(mn) and not _nan(mx):
                 mins[c] = _stats_serializable(mn)
                 maxs[c] = _stats_serializable(mx)
-            nulls[c] = r[f"__nl{i}"]
-        parsed = urlparse(r["__fp"])
-        key = unquote(parsed.path) if parsed.scheme else r["__fp"]
+            if "nulls" in ent:
+                nulls[c] = ent["nulls"]
         out[key] = json.dumps({
-            "numRecords": r["__n"], "minValues": mins,
+            "numRecords": st["num_rows"], "minValues": mins,
             "maxValues": maxs, "nullCount": nulls})
     return out
 
 
 def _stage_data_files(
-    df: DataFrame, path: str, partition_by: list[str] | None = None,
+    df: DataFrame, path: str, meta0: dict | None,
+    partition_by: list[str] | None = None,
     data_change: bool = True, subdir: str | None = None,
     small: bool = False,
 ) -> list[dict]:
@@ -1524,11 +1415,11 @@ def _stage_data_files(
     distributed write job (r15, guide §1.2/§5 —
     sources/driver_stage.py); everything downstream (footer stats,
     rename walk, add actions) is identical, and any fast-path failure
-    falls back to the normal write."""
-    try:  # v0 (new table): nothing recorded yet to honor
-        meta0 = _replay_state(path)[0]
-    except Exception:
-        meta0 = None
+    falls back to the normal write.
+
+    ``meta0`` is the table metadata the caller's own log replay holds
+    (None for a new table): column-mapped tables stage physical
+    names."""
     if meta0 is not None and _column_mapping_mode(meta0) != "none":
         # PROTOCOL.md Column Mapping Writer Requirements: data files
         # (and change files) store PHYSICAL names; partition dirs and
@@ -1574,7 +1465,7 @@ def _stage_data_files(
     excl = _collated_cols(meta0) if meta0 is not None else set()
     if meta0 is not None and _column_mapping_mode(meta0) != "none":
         excl = {_logical_physical_names(meta0).get(c, c) for c in excl}
-    staged_stats = _staged_stats(df, tmp, exclude=excl)
+    staged_stats = _add_stats_json(df, tmp, exclude=excl)
     adds: list[dict] = []
     now = int(time.time() * 1000)
 
@@ -1596,9 +1487,7 @@ def _stage_data_files(
             if "/" in dest_rel:
                 fs.mkdirs(fsio.join(path, dest_rel.rsplit("/", 1)[0]))
             dest = fsio.join(path, dest_rel)
-            p2 = urlparse(full)
-            skey = unquote(p2.path) if (p2.scheme and len(p2.scheme) > 1) \
-                else os.path.abspath(full)
+            skey = canon_path(full)
             if not fs.rename(full, dest):
                 raise IOError(f"delta stage: could not place {dest_rel}")
             add = {
@@ -1739,137 +1628,33 @@ def _fieldid_fields(fields: list[dict]) -> list[dict]:
     return out
 
 
-def bounds_disprove(mn, mx, op, v) -> bool:
-    """True iff the closed range [mn, mx] PROVES no value satisfies
-    ``(op, v)`` — the shared disproof kernel of Delta stats pruning and
-    Iceberg bounds pruning. Conservative on every edge: NaN bounds or
-    values (floating max=NaN would otherwise disprove everything),
-    incomparable types, tz-aware vs naive timestamps, and comparison
-    errors all return False (keep the file). Timestamp STRINGS from
-    different writers render differently (' ' vs 'T' separators,
-    trailing 'Z', millis vs micros) — when both sides parse as ISO
-    timestamps they compare as instants, so lexicographic quirks can't
-    wrongly disprove."""
-    import datetime
-    import math
-
-    def _nan(x):
-        return isinstance(x, float) and math.isnan(x)
-
-    if _nan(mn) or _nan(mx) or _nan(v):
-        return False
-    if isinstance(mn, str) and isinstance(mx, str) and isinstance(v, str):
-        def _ts(x):
-            try:
-                return datetime.datetime.fromisoformat(
-                    x.replace("Z", "+00:00"))
-            except Exception:
-                return None
-        pmn, pmx, pv = _ts(mn), _ts(mx), _ts(v)
-        if pmn is not None and pmx is not None and pv is not None:
-            if (pmn.tzinfo is None) != (pv.tzinfo is None):
-                return False
-            mn, mx, v = pmn, pmx, pv
-    num = (int, float)
-    comparable = type(mn) is type(v) or (
-        isinstance(mn, num) and not isinstance(mn, bool)
-        and isinstance(v, num) and not isinstance(v, bool))
-    if not comparable:
-        return False
-    try:
-        return ((op == ">" and not mx > v)
-                or (op == ">=" and not mx >= v)
-                or (op == "<" and not mn < v)
-                or (op == "<=" and not mn <= v)
-                or (op == "=" and not mn <= v <= mx))
-    except TypeError:
-        return False
-
-
-def partition_value_disprove(
-    raw: str | None, op: str, v, hive_null: str = _HIVE_NULL,
-) -> bool:
-    """True iff a file's literal partition value PROVES no row matches
-    ``(op, v)``. The stringly Hive value parses into the literal's
-    domain (a partition value is both min and max, so the shared
-    kernel applies pointwise); the NULL sentinel satisfies no
-    comparison; unparseable values keep the file."""
-    import datetime
-
-    if raw is None:
-        return False
-    if raw == hive_null:
-        return True
-    try:
-        if isinstance(v, bool):
-            pv = raw.lower() == "true"
-        elif isinstance(v, int):
-            pv = int(raw)
-        elif isinstance(v, float):
-            pv = float(raw)
-        elif isinstance(v, datetime.datetime):
-            pv = datetime.datetime.fromisoformat(raw)
-        elif isinstance(v, datetime.date):
-            pv = datetime.date.fromisoformat(raw)
-        else:
-            pv = raw
-    except Exception:
-        return False
-    return bounds_disprove(pv, pv, op, v)
-
-
 def prune_files_by_stats(files: dict, skip_filters, part_cols=()) -> dict:
-    """Data skipping over ``add.stats`` (PROTOCOL.md Per-file
-    Statistics) AND ``add.partitionValues``: drop every file whose
-    min/max/nullCount — or literal partition value, for filters on a
-    partition column — PROVE no row can satisfy the conjunction of
-    ``(col, op, value)`` filters, op in > >= < <= =. Conservative by
-    construction — a file with missing or unparseable stats, or a type
-    mismatch, is always KEPT, so pruning can never change results, only
-    skip I/O. This is the file-level skipping a 100 TB incremental load
-    needs: the watermark predicate eliminates files (and whole
-    partitions) without opening a single footer (Spark's own row-group
-    skipping only helps after the file is listed + opened)."""
+    """:func:`lake_core.prune_files` over ``{rel: add}``: drop every
+    file whose ``add.stats`` min/max/nullCount (PROTOCOL.md Per-file
+    Statistics) — or literal ``add.partitionValues``, for filters on a
+    partition column — PROVE no row satisfies the conjunction of
+    ``(col, op, value)`` filters. This is the file-level skipping a
+    100 TB incremental load needs: the watermark predicate eliminates
+    files (and whole partitions) without opening a single footer."""
     part_cols = set(part_cols or ())
-    out: dict[str, dict] = {}
-    for rel, add in files.items():
-        keep = True
-        # partition conjuncts apply regardless of stats presence —
-        # partition columns never appear in data-file stats
-        for col, op, val in skip_filters:
-            if col in part_cols and partition_value_disprove(
-                    (add.get("partitionValues") or {}).get(col), op, val):
-                keep = False
-                break
-        stats_raw = add.get("stats") if keep else None
-        if stats_raw:
-            try:
-                s = json.loads(stats_raw)
-            except Exception:
-                s = None
-            for col, op, val in (skip_filters if s else []):
-                # partition columns fall through here too: the staged
-                # scan restores them via directory discovery, so stats
-                # may prune where the stringly partition check could not
-                mn = (s.get("minValues") or {}).get(col)
-                mx = (s.get("maxValues") or {}).get(col)
-                v = _stats_serializable(val)
-                if mn is None or mx is None:
-                    # no bounds: all-null column (comparisons never
-                    # match -> prune) only when nullCount proves it
-                    n = s.get("numRecords")
-                    nn = (s.get("nullCount") or {}).get(col)
-                    if n is not None and nn == n and n > 0:
-                        keep = False
-                    if not keep:
-                        break
-                    continue
-                if bounds_disprove(mn, mx, op, v):
-                    keep = False
-                    break
-        if keep:
-            out[rel] = add
-    return out
+
+    def partition_disproves(f, col, op, val):
+        return col in part_cols and partition_value_disprove(
+            (f[1].get("partitionValues") or {}).get(col), op, val)
+
+    def bounds(f, cols):
+        try:
+            s = json.loads(f[1].get("stats") or "{}")
+        except (ValueError, TypeError):
+            return {}
+        mins, maxs = s.get("minValues") or {}, s.get("maxValues") or {}
+        nulls = s.get("nullCount") or {}
+        return {c: (mins.get(c), maxs.get(c), nulls.get(c),
+                    s.get("numRecords")) for c in cols} if s else {}
+
+    return dict(prune_files(
+        files.items(), skip_filters, partition_disproves, bounds,
+        lambda col, val: _stats_serializable(val)))
 
 
 def commit_timestamp_ms(path: str, version: int) -> int:
@@ -2441,49 +2226,6 @@ def _raw_position_scan(spark, path: str, meta: dict, rels) -> DataFrame:
              .withColumn("__pos", F.col("_metadata.row_index"))
 
 
-def _doomed_coords(
-    spark, path: str, meta: dict, rels, pk: list[str], keys: DataFrame,
-    doom_matched: bool, max_dv_rows: int,
-) -> tuple[dict[str, int], dict[str, list[int]] | None]:
-    """ONE scan+join pass over ``rels``: ``(doomed counts per rel,
-    doomed positions per rel — or None when the delete is dense)``.
-    ``doom_matched=True`` dooms rows whose PK appears in ``keys``
-    (merge: matched rows move to new files); False dooms rows whose PK
-    is ABSENT (delete_missing).
-
-    The doomed (file, position) coordinates are persisted so the count
-    action and the positions action share the single scan+join (guide
-    §1.2: the former census/positions split scanned and joined the
-    candidate files TWICE). The DRIVER collect of positions stays
-    gated on the counts — a dense delete (> ``max_dv_rows`` doomed)
-    returns ``(counts, None)`` without ever pulling positions, the
-    same bound as before; keep that gate if you touch this — an
-    unbounded positions collect is the 100 TB failure mode. The
-    executor-side cache holds only the doomed coordinates (~16 B/row,
-    disk-spillable), which a dense delete's CoW fallback was going to
-    rewrite in full anyway."""
-    from pyspark.storagelevel import StorageLevel
-
-    scan = _raw_position_scan(spark, path, meta, rels)
-    keyset = keys.select(*pk).distinct()
-    how = "left_semi" if doom_matched else "left_anti"
-    coords = scan.join(keyset, on=pk, how=how).select("__fp", "__pos")
-    coords.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        amap = _add_key_map(path, rels)
-        doom = {amap[_uri_abs(r["__fp"])]: r["count"]
-                for r in coords.groupBy("__fp").count().collect()}
-        if not doom or sum(doom.values()) > max_dv_rows:
-            return doom, None
-        rows = coords.groupBy("__fp") \
-            .agg(F.sort_array(F.collect_list("__pos")).alias("__ps")) \
-            .collect()
-        return doom, {amap[_uri_abs(r["__fp"])]: list(r["__ps"])
-                      for r in rows}
-    finally:
-        coords.unpersist()
-
-
 def _loosen_stats(stats_json: str | None) -> str | None:
     """Re-added DV file keeps its stats for skipping, marked
     ``tightBounds: false`` (PROTOCOL.md §Per-file Statistics: with a DV
@@ -2507,43 +2249,33 @@ def _produce_dv_actions(
     """Deletion-vector actions for a sparse delete over ``rels``
     (PROTOCOL.md §Deletion Vectors, Writer Requirements): each touched
     file gets remove+add on the SAME data file with a new DV descriptor
-    (old DV positions unioned in — one DV per file), fully-dead files
-    become plain removes, untouched files produce nothing. The
-    doomed-coordinates scan doubles as the touched-file probe — callers
-    pass the WHOLE candidate set rather than pre-probing (one scan, not
-    two; measured on a 9.6M-row / 16-file table, the fused path cut the
-    sparse-delete wall time below CoW while writing 917 bytes instead
-    of 134 MB).
-    Returns ``(actions, n_dv, n_dead, doomed_rels)``, or None when the
-    delete is dense enough (> ``max_dv_rows`` doomed positions) that a
-    CoW rewrite is the better plan — the caller falls back.
-
-    The doomed coordinates come from ONE scan+join
-    (:func:`_doomed_coords`; guide §1.2 — the former census/positions
-    split scanned and joined the candidates twice), and the physical
-    row count needed for the fully-dead check comes from the log's own
-    ``add.stats``/parquet footer (:func:`_add_num_records`) instead of
-    a counting pass over the data."""
+    (:func:`lake_core.fold_dv_rows`: old positions unioned in, one DV
+    per file), fully-dead files become plain removes, untouched files
+    produce nothing. The one doomed-positions scan
+    (:func:`lake_core.doomed_positions`) doubles as the touched-file
+    probe, so callers pass the WHOLE candidate set. Physical row counts
+    come from the log (:func:`_add_num_records`). Returns ``(actions,
+    n_dv, n_dead, doomed_rels)``, or None when the delete is dense
+    (> ``max_dv_rows`` doomed positions) and the caller falls back to
+    a CoW rewrite."""
     from . import delta_dv
 
-    doom, positions = _doomed_coords(
-        spark, path, meta, rels, pk, keys, doom_matched, max_dv_rows)
+    amap = _add_key_map(path, rels)
+    doom, positions = doomed_positions(
+        _raw_position_scan(spark, path, meta, rels), keys, pk,
+        doom_matched, max_dv_rows, key=lambda fp: amap[_uri_abs(fp)])
     if not doom:
         return [], 0, 0, []
     if positions is None:  # dense delete: CoW rewrite is the better plan
         return None
-    doomed_rels = sorted(doom)
-    dv_rows: dict[str, list[int]] = {}
-    dead: list[str] = []
-    for rel in doomed_rels:
-        merged = set(positions.get(rel) or ())
+
+    def old_positions(rel):
         desc = files[rel].get("deletionVector")
-        if desc:
-            merged |= {int(i) for i in delta_dv.dv_indices(path, desc)}
-        if len(merged) >= _add_num_records(path, files[rel]):
-            dead.append(rel)  # every physical row deleted -> drop file
-        else:
-            dv_rows[rel] = sorted(merged)
+        return delta_dv.dv_indices(path, desc) if desc else ()
+
+    dv_rows, dead = fold_dv_rows(
+        doom, positions, old_positions,
+        lambda rel: _add_num_records(path, files[rel]))
     actions: list[dict] = []
     if dv_rows:
         descs = delta_dv.write_dv_file(path, dv_rows)
@@ -2559,7 +2291,7 @@ def _produce_dv_actions(
                 "deletionVector": desc}})
     for rel in dead:
         actions.append(_remove_action(rel, files[rel], now))
-    return actions, len(dv_rows), len(dead), doomed_rels
+    return actions, len(dv_rows), len(dead), sorted(doom)
 
 
 # ------------------------------------------------------------ row tracking
@@ -2756,33 +2488,17 @@ def _rt_attach_preserved(
 ) -> DataFrame:
     """Materialize row ids into a rewrite's output (PROTOCOL.md Row
     Tracking Writer Requirements: rewritten rows keep their row ids;
-    UPDATED rows take the new commit's version, untouched rows keep
-    theirs). Joins the rewrite output back to the touched files'
-    (pk -> id) mapping — merge semantics already assume pk uniqueness
-    in the target. Rows absent from the mapping (inserts) materialize
-    NULL and read fresh ids from the new file's baseRowId.
-    ``updated_keys`` (None = pure rearrangement) marks the rows whose
-    commit version must reset to the new commit's default."""
+    UPDATED rows — pk in ``updated_keys`` — take the new commit's
+    version, untouched rows keep theirs; inserts read fresh ids from
+    the new file's baseRowId): :func:`lake_core.attach_preserved` over
+    the touched files' materialized columns."""
     rid_col, rcv_col = _rt_cols(meta)
     if not rid_col:
         return replacement
     mapping = _scan_with_row_ids(
-        spark, path, meta, files, rels, "__rt_rid", "__rt_rcv") \
-        .select(*pk, "__rt_rid", "__rt_rcv")
-    out = replacement.join(mapping, on=pk, how="left")
-    drop = ["__rt_rid", "__rt_rcv"]
-    out = out.withColumn(rid_col, F.col("__rt_rid"))
-    if rcv_col:
-        if updated_keys is not None:
-            out = out.join(
-                updated_keys.select(*pk).distinct()
-                .withColumn("__rt_hit", F.lit(1)), on=pk, how="left")
-            out = out.withColumn(rcv_col, F.when(
-                F.col("__rt_hit").isNull(), F.col("__rt_rcv")))
-            drop.append("__rt_hit")
-        else:
-            out = out.withColumn(rcv_col, F.col("__rt_rcv"))
-    return out.drop(*drop)
+        spark, path, meta, files, rels, RID, SEQ).select(*pk, RID, SEQ)
+    return attach_preserved(
+        replacement, mapping, updated_keys, pk, rid_col, rcv_col)
 
 
 def _read_mapped_partitioned(
@@ -2926,6 +2642,7 @@ def write_delta(
     actions: list[dict] = []
     honor_meta = None  # table whose column contracts bind this batch
     prot: dict = {}
+    meta = None
     if version == 0:
         actions += _first_commit_actions(df, partition_by)
     else:
@@ -2978,7 +2695,7 @@ def write_delta(
                         _with_column_defaults(df, meta), meta),
                     meta), meta)
         partition_by = existing_parts
-    staged = _stage_data_files(df, path, partition_by)
+    staged = _stage_data_files(df, path, meta, partition_by)
     actions += staged
     if honor_meta is not None:
         actions += _identity_hwm_action(honor_meta, staged, frame=df)
@@ -3132,11 +2849,8 @@ def merge_delta(
             probe = _read_files_mor(
                 spark, path, meta, files, sorted(candidates),
                 keep_fp=True)
-            hits = (probe.select("__fp", *pk)
-                    .join(src.select(*pk).distinct(), on=pk,
-                          how="left_semi")
-                    .select("__fp").distinct().collect())
-            touched_rel = [amap[r["__fp"]] for r in hits]
+            touched_rel = [amap[fp] for fp in
+                           touched_files(probe, "__fp", src, pk)]
         if dv is not None:
             dv_actions, n_dv, n_dead, doomed_rels = dv
             # DV-applied read of just the doomed files: their DV-deleted
@@ -3158,7 +2872,7 @@ def merge_delta(
                     spark, path, meta, files, doomed_rels, appended,
                     src, pk)
             adds = _stage_data_files(
-                appended, path, part_cols or None,
+                appended, path, meta, part_cols or None,
                 # appended <= doomed files' rows + batch rows
                 small=small_batch
                 and _bytes_of(doomed_rels) <= DRIVER_STAGE_BYTES)
@@ -3166,7 +2880,7 @@ def merge_delta(
             if cdf_enabled(meta):
                 cdc_actions = _stage_cdc_actions(
                     _cdf_diff(matched_rows, data_appended, pk), path,
-                    part_cols or None,
+                    meta, part_cols or None,
                     # diff <= doomed pre-image + staged post-image
                     small=_bytes_of(doomed_rels)
                     + sum(int(a["add"].get("size") or 0) for a in adds)
@@ -3211,7 +2925,7 @@ def merge_delta(
         replacement = _rt_attach_preserved(
             spark, path, meta, files, touched_rel, replacement, src, pk)
     adds = _stage_data_files(
-        replacement, path, part_cols or None,
+        replacement, path, meta, part_cols or None,
         # replacement <= touched files' rows + batch rows (both proven)
         small=small_batch and _bytes_of(touched_rel) <= DRIVER_STAGE_BYTES)
     now = int(time.time() * 1000)
@@ -3225,7 +2939,7 @@ def merge_delta(
     if cdf_enabled(meta) and touched_rel:
         cdc_actions = _stage_cdc_actions(
             _cdf_diff(touched_rows, data_repl, pk), path,
-            part_cols or None,
+            meta, part_cols or None,
             # diff <= touched pre-image + staged post-image, both sizes
             # already in hand — no batch hint needed
             small=_bytes_of(touched_rel)
@@ -3325,7 +3039,7 @@ def delete_missing_delta(
                 cdc_actions = _stage_cdc_actions(
                     _cdf_diff(touched_live,
                               _dm(touched_live, keys, pk), pk),
-                    path, part_cols or None,
+                    path, meta, part_cols or None,
                     # diff <= 2x the doomed files' pre-image bytes
                     small=2 * _bytes_of(doomed_rels)
                     <= DRIVER_STAGE_BYTES)
@@ -3348,10 +3062,8 @@ def delete_missing_delta(
     amap = _add_key_map(path, files)
     scan = _read_files_mor(spark, path, meta, files, sorted(files),
                            keep_fp=True)
-    hits = (scan.select("__fp", *pk)
-            .join(keys, on=pk, how="left_anti")
-            .select("__fp").distinct().collect())
-    touched_rel = sorted(amap[r["__fp"]] for r in hits)
+    touched_rel = sorted(amap[fp] for fp in touched_files(
+        scan, "__fp", keys, pk, matched=False))
     if not touched_rel:
         return {"touched": 0, "new_files": 0, "kept": len(files),
                 "version": latest_version(path)}
@@ -3369,7 +3081,7 @@ def delete_missing_delta(
             spark, path, meta, files, touched_rel, replacement, upd, pk)
     actions: list[dict] = _evolve_schema_actions(data_repl, meta)
     adds = _stage_data_files(
-        replacement, path, part_cols or None,
+        replacement, path, meta, part_cols or None,
         # delete_missing only drops/flags rows: replacement is bounded
         # by the touched files' own bytes — no caller hint needed
         small=_bytes_of(touched_rel) <= DRIVER_STAGE_BYTES)
@@ -3379,7 +3091,7 @@ def delete_missing_delta(
     if cdf_enabled(meta):  # deletes (or soft-delete flips) per row
         cdc_actions = _stage_cdc_actions(
             _cdf_diff(touched_rows, data_repl, pk), path,
-            part_cols or None,
+            meta, part_cols or None,
             small=_bytes_of(touched_rel)
             + sum(int(a["add"].get("size") or 0) for a in adds)
             <= DRIVER_STAGE_BYTES)
@@ -3436,9 +3148,8 @@ def replace_where_delta(
         amap = _add_key_map(path, files)
         scan = _read_files_mor(spark, path, meta, files,
                                sorted(candidates), keep_fp=True)
-        hits = (scan.filter(pred_true)
-                .select("__fp").distinct().collect())
-        touched_rel = sorted(amap[r["__fp"]] for r in hits)
+        touched_rel = sorted(
+            amap[fp] for fp in touched_files(scan.filter(pred_true), "__fp"))
 
     kept = pre = None
     if touched_rel:
@@ -3458,12 +3169,12 @@ def replace_where_delta(
         kept = kept.filter(~pred_true)
 
     actions = _evolve_schema_actions(df, meta)
-    adds = _stage_data_files(df, path, part_cols or None)
+    adds = _stage_data_files(df, path, meta, part_cols or None)
     if kept is not None and kept.limit(1).count():
         for c, t in df.dtypes:  # evolved columns read null in kept
             if c not in kept.columns:
                 kept = kept.withColumn(c, F.lit(None).cast(t))
-        adds += _stage_data_files(kept, path, part_cols or None)
+        adds += _stage_data_files(kept, path, meta, part_cols or None)
 
     cdc_actions: list[dict] = []
     if cdf_enabled(meta):
@@ -3476,7 +3187,8 @@ def replace_where_delta(
                     dels = dels.withColumn(c, F.lit(None).cast(t))
             cdf = dels.withColumn(
                 "_change_type", F.lit("delete")).unionByName(ins)
-        cdc_actions = _stage_cdc_actions(cdf, path, part_cols or None)
+        cdc_actions = _stage_cdc_actions(cdf, path, meta,
+                                         part_cols or None)
 
     now = int(time.time() * 1000)
     removes = [_remove_action(p, files[p], now) for p in touched_rel]
@@ -3939,7 +3651,7 @@ def optimize_delta(
     else:
         rows = rows.repartition(n_out)
     adds = _stage_data_files(
-        rows, path, part_cols or None, data_change=False)
+        rows, path, meta, part_cols or None, data_change=False)
     if clustered and zorder_by == clustered:
         for a in adds:  # spec: clustered rewrites tag their provider
             a["add"]["clusteringProvider"] = "liquid"
@@ -4350,7 +4062,7 @@ def convert_to_delta(
 
     Per-file numRecords + value bounds ride each add from ONE Spark
     aggregate over the directory (the same job shape as
-    :func:`_staged_stats`), so data skipping works from version 0 —
+    :func:`_add_stats_json`), so data skipping works from version 0 —
     converting a 100 TB directory costs one metadata pass, not a
     rewrite. Refuses directories that are already Delta or Iceberg
     tables."""
@@ -4377,8 +4089,8 @@ def convert_to_delta(
     reader = spark.read.option("basePath", path) if part_cols \
         else spark.read
     df = reader.parquet(path)
-    stats = _staged_stats(df.drop(*part_cols) if part_cols else df,
-                          path)
+    stats = _add_stats_json(df.drop(*part_cols) if part_cols else df,
+                            path)
     now = int(time.time() * 1000)
     actions = _first_commit_actions(df, part_cols or None)
     for rel in sorted(rels):
@@ -4388,21 +4100,11 @@ def convert_to_delta(
             "partitionValues": {c: pv.get(c) for c in part_cols},
             "size": fs.getsize(fsio.join(path, rel)),
             "modificationTime": now, "dataChange": True,
-            "stats": stats.get(_canon_table_rel(path, rel)),
+            "stats": stats.get(canon_path(fsio.join(path, rel))),
         }})
     _commit(path, 0, actions)
     _update_crc(path, 0, actions)
     return 0
-
-
-def _canon_table_rel(path: str, rel: str) -> str:
-    """The _staged_stats key for a table-relative file path."""
-    from urllib.parse import unquote as _unq
-    from urllib.parse import urlparse as _urp
-
-    full = fsio.join(path, rel)
-    parsed = _urp(full)
-    return _unq(parsed.path) if parsed.scheme else os.path.abspath(full)
 
 
 def clone_delta(src: str, dst: str) -> int:
@@ -4959,7 +4661,7 @@ def _cdf_diff(pre: DataFrame, post: DataFrame, pk: list[str]) -> DataFrame:
 
 
 def _stage_cdc_actions(
-    cdf: DataFrame, path: str, part_cols: list[str] | None,
+    cdf: DataFrame, path: str, meta: dict, part_cols: list[str] | None,
     small: bool = False,
 ) -> list[dict]:
     """Stage a change DataFrame under ``_change_data/`` -> ``cdc``
@@ -4969,7 +4671,7 @@ def _stage_cdc_actions(
     file sizes + staged add sizes, both already in hand from the log)
     — see _stage_data_files."""
     staged = _stage_data_files(
-        cdf, path, partition_by=part_cols or None,
+        cdf, path, meta, partition_by=part_cols or None,
         data_change=False, subdir="_change_data", small=small)
     return [{"cdc": {
         "path": a["add"]["path"],

@@ -1,8 +1,10 @@
 """Per-file skipping stats from parquet FOOTERS instead of a re-scan.
 
-Both lake writers (delta_py._staged_stats, iceberg_py._staged_file_stats)
-historically ran one extra Spark job over the files they had just
-written to collect numRecords / min / max / nullCount. The parquet
+:func:`staged_stats` is the one producer of the per-file stats both
+lake writers record (delta_py encodes them as ``add.stats`` JSON,
+iceberg_py as field-id binary bounds). Writers historically ran one
+extra Spark job over the files they had just written to collect
+numRecords / min / max / nullCount. The parquet
 writer already computed all of that: every footer carries row-group
 statistics, so on a local filesystem the same numbers are available by
 reading a few KB of footer per file instead of re-reading 100% of the
@@ -20,8 +22,8 @@ Semantics are EXACT-OR-ABSENT, verified against Spark 4.1.2's writer:
 - INT96 timestamps carry no footer stats at all — the session writes
   TIMESTAMP_MICROS (session.py), which both lake specs require anyway;
 - a column with no usable stats is simply omitted, and every consumer
-  (prune_files_by_stats, the Iceberg bound pruner and max_value
-  watermark) treats absence conservatively.
+  (lake_core.prune_files and the max_value watermark) treats absence
+  conservatively.
 
 Anything unexpected — non-local filesystem, a footer pyarrow cannot
 open (e.g. v3 variant logical types), multiple row groups disagreeing
@@ -35,10 +37,16 @@ from __future__ import annotations
 import datetime
 import math
 import os
+from urllib.parse import unquote, urlparse
 
 from sling_cli_spark import fsio
 
-__all__ = ["footer_num_rows", "staged_footer_stats"]
+__all__ = ["HIVE_NULL", "canon_path", "footer_num_rows",
+           "hive_partition_values", "naive_utc", "staged_footer_stats",
+           "staged_stats"]
+
+#: the Hive directory value of a NULL partition
+HIVE_NULL = "__HIVE_DEFAULT_PARTITION__"
 
 
 def _isnan(v) -> bool:
@@ -52,6 +60,40 @@ def _plain(v):
     if isinstance(v, datetime.datetime) and v.tzinfo is not None:
         return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
     return v
+
+
+def naive_utc(v):
+    """Normalize a datetime to NAIVE UTC — the instant both stats paths
+    must agree on: footer stats already arrive naive-UTC; a Spark-job
+    ``collect()`` returns naive OS-LOCAL datetimes, which on a non-UTC
+    host would record shifted bounds."""
+    if isinstance(v, datetime.datetime):
+        if v.tzinfo is None:
+            v = v.astimezone()  # attach the OS tz (same instant)
+        return v.astimezone(datetime.timezone.utc).replace(tzinfo=None)
+    return v
+
+
+def canon_path(p: str) -> str:
+    """Canonical comparison form for file paths from listings, manifests
+    and ``_metadata.file_path`` URIs alike. Spark percent-encodes the
+    URI over the ON-DISK name (itself already Hive-escaped: a ':' dir
+    char is stored as '%3A' and surfaces as '%253A' in the URI), so URI
+    paths need exactly one unquote to match the on-disk path."""
+    parsed = urlparse(p)
+    if parsed.scheme and len(parsed.scheme) > 1:
+        return os.path.abspath(unquote(parsed.path))
+    return os.path.abspath(p)
+
+
+def hive_partition_values(rel_dir: str) -> dict[str, str]:
+    """'k1=v1/k2=v2' -> {'k1': 'v1', ...} (URL-unescaped, Hive layout)."""
+    out: dict[str, str] = {}
+    for seg in rel_dir.split("/"):
+        if "=" in seg:
+            k, _, v = seg.partition("=")
+            out[k] = unquote(v)
+    return out
 
 
 def _file_stats(local: str) -> dict:
@@ -148,3 +190,95 @@ def staged_footer_stats(tmp: str) -> dict[str, dict] | None:
         return out
     except Exception:
         return None
+
+
+def _from_dir(type_name: str, raw: str):
+    """A Hive dir rendering parsed back into the Spark column type's
+    Python value, for the types whose rendering is lossless."""
+    if type_name == "string":
+        return raw
+    if type_name in ("long", "integer", "short", "byte"):
+        return int(raw)
+    if type_name in ("double", "float"):
+        return float(raw)
+    if type_name == "date":
+        return datetime.date.fromisoformat(raw)
+    if type_name == "boolean":
+        return raw == "true"
+    if type_name in ("timestamp", "timestamp_ntz"):
+        # dir renders in the UTC-pinned session tz, micros precision
+        return datetime.datetime.fromisoformat(raw)
+    raise ValueError(type_name)
+
+
+def _footer_file_cols(fst: dict, cols: list[str], types: dict) -> dict:
+    """One file's stats over ``cols``: data columns straight from its
+    footer; partition columns (absent from the file) synthesized from
+    the Hive dir value, which is EXACT by construction — every row of
+    the file holds that literal. A null partition records only its
+    null count; an unparseable rendering records no bounds."""
+    pvals = hive_partition_values(fst["rel_dir"])
+    out: dict[str, dict] = {}
+    for c in cols:
+        ent = fst["cols"].get(c)
+        if ent is None and c in pvals:
+            if pvals[c] == HIVE_NULL:
+                ent = {"nulls": fst["num_rows"]}
+            else:
+                try:
+                    v = _from_dir(types.get(c), pvals[c])
+                    ent = {"mn": v, "mx": v, "nulls": 0}
+                except (ValueError, TypeError):
+                    ent = {"nulls": 0}
+        if ent is not None:
+            out[c] = ent
+    return out
+
+
+def staged_stats(
+    df, tmp: str, cols: list[str], null_counts: bool = True,
+) -> dict[str, dict]:
+    """Per-file stats of the parquet files just staged under ``tmp``
+    from the frame ``df``: ``{canon_path: {"num_rows": n, "cols":
+    {name: {"mn", "mx", "nulls"}}}}`` over ``cols``, each value present
+    only when known exactly (a NaN max is a value; encoders drop it).
+
+    Served from the freshly written FOOTERS when the stage is on local
+    disk (no extra job — re-reading 100% of the staged bytes to
+    recompute what the writer already recorded is the anti-pattern);
+    otherwise ONE Spark aggregate over the staged files, so a commit
+    to hdfs://-style storage keeps exact stats; ``null_counts=False``
+    (a format that records none) keeps the null counts out of that
+    job. A failed job degrades to no stats, never a failed commit."""
+    types = {f.name: f.dataType.typeName() for f in df.schema.fields}
+    footer = staged_footer_stats(tmp)
+    if footer is not None:
+        return {key: {"num_rows": fst["num_rows"],
+                      "cols": _footer_file_cols(fst, cols, types)}
+                for key, fst in footer.items()}
+    from pyspark.sql import functions as F
+
+    aggs = [F.count(F.lit(1)).alias("__n")]
+    for i, c in enumerate(cols):
+        col = F.col(f"`{c}`")
+        aggs += [F.min(col).alias(f"__mn{i}"), F.max(col).alias(f"__mx{i}")]
+        if null_counts:
+            aggs.append(F.count(F.when(col.isNull(), 1)).alias(f"__nl{i}"))
+    try:
+        rows = (df.sparkSession.read.parquet(tmp)
+                .groupBy(F.col("_metadata.file_path").alias("__fp"))
+                .agg(*aggs).collect())
+    except Exception:
+        return {}
+    # collect() timestamps are naive OS-local: normalize to the
+    # naive-UTC instant the footer path records
+    out = {}
+    for r in rows:
+        st = out[canon_path(r["__fp"])] = {"num_rows": int(r["__n"]),
+                                           "cols": {}}
+        for i, c in enumerate(cols):
+            ent = st["cols"][c] = {"mn": naive_utc(r[f"__mn{i}"]),
+                                   "mx": naive_utc(r[f"__mx{i}"])}
+            if null_counts:
+                ent["nulls"] = int(r[f"__nl{i}"])
+    return out

@@ -59,7 +59,7 @@ import os
 import re
 import time
 import uuid
-from urllib.parse import unquote, urlparse
+from urllib.parse import urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -67,9 +67,14 @@ from ..localframe import local_df
 
 from sling_cli_spark import fsio
 from sling_cli_spark.sources.avro_py import read_avro, write_avro
-from sling_cli_spark.sources.footer_stats import footer_num_rows
+from sling_cli_spark.sources.footer_stats import (
+    HIVE_NULL as _HIVE_NULL, canon_path as _canon, footer_num_rows,
+    hive_partition_values, staged_stats)
 from sling_cli_spark.sources.delta_py import (
-    _HIVE_NULL, UnsupportedTableFeature, hive_partition_str)
+    UnsupportedTableFeature, _walk_data_files, hive_partition_str)
+from sling_cli_spark.sources.lake_core import (
+    RID, SEQ, attach_preserved, doomed_positions, fold_dv_rows,
+    partition_value_disprove, prune_files, touched_files)
 
 _SPARK_TO_ICE = {
     "long": "long", "integer": "int", "short": "int", "byte": "int",
@@ -273,11 +278,13 @@ def _decode_bound(ice_type: str, b: bytes):
     if ice_type == "int":
         return struct.unpack("<i", b)[0]
     if ice_type == "long":
-        return struct.unpack("<q", b)[0]
+        # a file written before an int -> long promotion keeps its
+        # 4-byte bounds (spec Appendix D); likewise float -> double
+        return struct.unpack("<i" if len(b) == 4 else "<q", b)[0]
     if ice_type == "float":
         return struct.unpack("<f", b)[0]
     if ice_type == "double":
-        return struct.unpack("<d", b)[0]
+        return struct.unpack("<f" if len(b) == 4 else "<d", b)[0]
     if ice_type == "string":
         return b.decode("utf-8")
     if ice_type == "boolean":
@@ -307,72 +314,57 @@ def _norm_bound_value(ice_type: str, v):
 def prune_files_by_bounds(
     files: list[dict], skip_filters, meta: dict,
 ) -> list[dict]:
-    """Data skipping over the manifests' per-file value bounds
-    (spec: data_file.lower_bounds / upper_bounds) — drop files whose
-    bounds PROVE no row satisfies the conjunction of ``(col, op,
-    value)`` filters, op in > >= < <= =. Conservative: missing bounds,
-    unknown columns, or undecodable values keep the file, so pruning
-    can only skip I/O, never change results — the Iceberg twin of
-    delta_py.prune_files_by_stats, sharing its disproof kernel. Filters
-    on IDENTITY-partition columns additionally prune from the
-    manifest's literal partition values (bucket/truncate/day-
-    transformed fields store transformed values and are never compared
-    against source-column filters); an inconclusive partition check
-    still falls through to the value bounds."""
-    from sling_cli_spark.sources.delta_py import (
-        bounds_disprove, partition_value_disprove)
+    """:func:`lake_core.prune_files` over manifest entries: drop files
+    whose value bounds (spec: data_file.lower_bounds / upper_bounds) or
+    partition values PROVE no row satisfies the conjunction of
+    ``(col, op, value)`` filters. Identity-partition columns compare
+    the literal value; a filter on a transformed field's SOURCE column
+    disproves through the recorded transformed value
+    (:func:`transform_partition_disprove`)."""
     from sling_cli_spark.sources.iceberg_transforms import (
         spec_transform_fields, transform_partition_disprove)
 
     current = _current_schema(meta) or {"fields": []}
-    by_name = {f["name"]: f for f in current["fields"]}
+    by_name = {f["name"]: f for f in current["fields"]
+               if isinstance(f.get("type"), str)
+               and f["type"] in _BOUND_TYPES}
     part_cols = _identity_part_cols(meta)
-    # source column -> [(partition field name, transform, src type)]:
-    # a filter on the SOURCE column prunes via the file's recorded
-    # TRANSFORMED partition value (bucket equality, truncate/temporal
-    # interval disproof — see transform_partition_disprove)
+    # source column -> [(partition field name, transform, src type)]
     tf_by_src: dict[str, list[tuple[str, str, str]]] = {}
     for fname, (transform, src, styp) in spec_transform_fields(
             meta).items():
         tf_by_src.setdefault(src, []).append((fname, transform, styp))
-    out = []
-    for f in files:
-        lo_raw = _bounds_map(f.get("lower_bounds")) or {}
-        hi_raw = _bounds_map(f.get("upper_bounds")) or {}
-        keep = True
-        for col, op, val in skip_filters:
-            if col in part_cols and partition_value_disprove(
-                    (f.get("partition") or {}).get(col), op, val):
-                keep = False
-                break
-            if any(transform_partition_disprove(
-                    transform, (f.get("partition") or {}).get(fname),
-                    op, val, styp)
-                    for fname, transform, styp in tf_by_src.get(col, ())):
-                keep = False
-                break
-            fld = by_name.get(col)
-            if fld is None or not isinstance(fld.get("type"), str) \
-                    or fld["type"] not in _BOUND_TYPES:
-                continue
-            fid = str(fld["id"])
-            lo_b, hi_b = lo_raw.get(fid), hi_raw.get(fid)
-            if lo_b is None or hi_b is None:
-                continue
+
+    def partition_disproves(f, col, op, val):
+        part = f.get("partition") or {}
+        return (col in part_cols and partition_value_disprove(
+            part.get(col), op, val)) or any(
+            transform_partition_disprove(t, part.get(n), op, val, styp)
+            for n, t, styp in tf_by_src.get(col, ()))
+
+    def bounds(f, cols):
+        lo = _bounds_map(f.get("lower_bounds")) or {}
+        hi = _bounds_map(f.get("upper_bounds")) or {}
+        out = {}
+        for c in cols & by_name.keys():
+            fid, t = str(by_name[c]["id"]), by_name[c]["type"]
             try:
-                mn = _decode_bound(fld["type"], lo_b)
-                mx = _decode_bound(fld["type"], hi_b)
-                v = _norm_bound_value(fld["type"], val)
+                mn, mx = _decode_bound(t, lo.get(fid)), \
+                    _decode_bound(t, hi.get(fid))
             except Exception:
                 continue
-            if mn is None or mx is None or v is None:
-                continue
-            if bounds_disprove(mn, mx, op, v):
-                keep = False
-                break
-        if keep:
-            out.append(f)
-    return out
+            if mn is not None and mx is not None:
+                out[c] = (mn, mx, None, None)
+        return out
+
+    def literal(col, val):
+        try:
+            return _norm_bound_value(by_name[col]["type"], val)
+        except Exception:
+            return None
+
+    return prune_files(files, skip_filters, partition_disproves, bounds,
+                       literal)
 
 
 def _absolute(path: str) -> str:
@@ -380,19 +372,6 @@ def _absolute(path: str) -> str:
     required to be a full location by the spec)."""
     return path if urlparse(path).scheme and len(urlparse(path).scheme) > 1 \
         else os.path.abspath(path)
-
-
-def _canon(p: str) -> str:
-    """Canonical comparison form for file paths from manifests and
-    ``_metadata.file_path`` URIs alike. Spark percent-encodes the URI
-    over the ON-DISK name (itself already Hive-escaped: a ':' dir char
-    is stored as '%3A' and surfaces as '%253A' in the URI), so URI
-    paths need exactly one unquote to match the manifest's literal
-    path."""
-    parsed = urlparse(p)
-    if parsed.scheme and len(parsed.scheme) > 1:
-        return os.path.abspath(unquote(parsed.path))
-    return os.path.abspath(p)
 
 
 def _meta_dir(path: str) -> str:
@@ -504,22 +483,29 @@ def _gate_v3_schema(path: str, meta: dict) -> None:
 
 def _ice_schema_for(
     df: DataFrame, base: dict | None = None, last_column_id: int = 0,
+    keep_wider: bool = True,
 ) -> dict:
     """Iceberg schema for ``df``. With ``base`` (the table's current
     schema), field ids are STABLE: columns present in the base keep
     their ids, new columns get fresh ids past ``last_column_id`` — the
     spec's evolution rule, and what keeps equality-delete field ids
-    meaningful across commits."""
+    meaningful across commits. ``keep_wider`` keeps the base's type
+    for a column the frame carries narrower (int under long): files
+    that stay in the table need it; a full overwrite does not."""
     base_fields = {f["name"]: f for f in (base or {}).get("fields", [])}
     counter = [max(last_column_id, _max_field_id(base or {}))]
     fields = []
     for f in df.schema.fields:
         bf = base_fields.get(f.name)
-        if bf is not None and \
-                _ice_to_spark_type(bf["type"]) == f.dataType:
-            # unchanged column: keep the base type VERBATIM — top-level
-            # and nested field ids stay stable across commits (spec
-            # §Schema Evolution)
+        if bf is not None and (
+                _ice_to_spark_type(bf["type"]) == f.dataType
+                or keep_wider and _promotes(
+                    _spark_to_ice_type(f.dataType, [0]), bf["type"])):
+            # unchanged column, or one the frame carries narrower than
+            # the table (it reads back widened): keep the base type
+            # VERBATIM — top-level and nested field ids stay stable
+            # across commits (spec §Schema Evolution), and bounds
+            # encode under the table's type
             fields.append({"id": bf["id"], "name": f.name,
                            "required": False, "type": bf["type"]})
             continue
@@ -1130,11 +1116,10 @@ def _rl_attach_preserved(
     ``delta_py._rt_attach_preserved``): rewritten rows keep their
     ``_row_id``; UPDATED rows null their ``_last_updated_sequence_number``
     (readers then derive the new file's data sequence number) while
-    untouched rows keep theirs. Joins the rewrite output back to the
-    touched entries' (pk -> id) mapping — merge semantics already
-    assume pk uniqueness in the target. Rows absent from the mapping
-    (inserts) materialize NULL and read fresh ids from the new file's
-    ``first_row_id``. ``updated_keys`` None = pure rearrangement
+    untouched rows keep theirs — :func:`lake_core.attach_preserved`
+    over the touched entries' (pk -> id) mapping. Rows absent from the
+    mapping (inserts) materialize NULL and read fresh ids from the new
+    file's ``first_row_id``. ``updated_keys`` None = pure rearrangement
     (compaction-style): both ids preserved verbatim. No-op below v3."""
     if int(meta.get("format-version", 1)) < 3:
         return replacement
@@ -1142,30 +1127,10 @@ def _rl_attach_preserved(
 
     mapping = _mor_read(spark, path, meta, entries, pos_dels, eq_dels,
                         with_row_ids=True).select(
-        *pk, F.col("_row_id").alias("__rl_rid"),
-        F.col("_last_updated_sequence_number").alias("__rl_seq"))
-    drop = ["__rl_rid", "__rl_seq"]
-    if updated_keys is not None:
-        # mark updated keys on the MAPPING side (touched-rows-sized,
-        # batch-key join AQE broadcasts) so the replacement pays ONE
-        # join, not two — r11, shaving the v3-merge lineage overhead
-        # the r10 bench flagged. Insert rows miss the mapping entirely:
-        # rid AND seq read null -> fresh from the new file, the same
-        # result the two-join form produced.
-        mapping = mapping.join(
-            updated_keys.select(*pk).distinct()
-            .withColumn("__rl_hit", F.lit(1)), on=pk, how="left")
-        out = replacement.join(mapping, on=pk, how="left") \
-            .withColumn("_row_id", F.col("__rl_rid")) \
-            .withColumn("_last_updated_sequence_number", F.when(
-                F.col("__rl_hit").isNull(), F.col("__rl_seq")))
-        drop.append("__rl_hit")
-    else:
-        out = replacement.join(mapping, on=pk, how="left") \
-            .withColumn("_row_id", F.col("__rl_rid")) \
-            .withColumn(
-                "_last_updated_sequence_number", F.col("__rl_seq"))
-    return out.drop(*drop)
+        *pk, F.col("_row_id").alias(RID),
+        F.col("_last_updated_sequence_number").alias(SEQ))
+    return attach_preserved(replacement, mapping, updated_keys, pk,
+                            "_row_id", "_last_updated_sequence_number")
 
 
 def read_iceberg_incremental(
@@ -1350,8 +1315,8 @@ def merge_iceberg(
         if candidates and _dv_writes_enabled_ice(meta, use_dvs, "merge") \
                 and all((d.get("file_format") or "PARQUET").upper()
                         == "PUFFIN" for d in pos_dels):
-            # the census over the pruned candidates doubles as the
-            # touched-file probe: one scan, not two
+            # the doomed-positions scan over the pruned candidates
+            # doubles as the touched-file probe: one scan, not two
             dv = _produce_dvs_ice(
                 spark, path, meta, candidates, pos_dels, pk, src,
                 doom_matched=True, max_dv_rows=max_dv_rows)
@@ -1361,7 +1326,7 @@ def merge_iceberg(
             # target rows never leave their file) appends as new files.
             # doomed may be EMPTY (pure-insert batch): the merge over
             # zero matched rows still appends the inserted rows.
-            dv_rows, superseded, dead = dv
+            dv_rows, _, dead = dv
             doomed = set(dv_rows) | dead
             doomed_entries = [f for f in candidates
                               if _canon(f["file_path"]) in doomed]
@@ -1372,24 +1337,9 @@ def merge_iceberg(
             appended = merge_dataframes(
                 matched_rows, src, pk, strategy=strategy,
                 update_key=update_key, **cdc_cols)
-            carried = [f for f in active
-                       if _canon(f["file_path"]) not in dead]
-            live_pos = [
-                d for d in pos_dels
-                if (d["file_path"], d.get("content_offset"))
-                not in superseded
-                and not (d.get("referenced_data_file")
-                         and _canon(d["referenced_data_file"]) in dead)]
-            cd = _live_delete_files(carried, live_pos, eq_dels)
-            snapshot_id, new_seq = _next_ids(path, meta, carried, cd)
-            by_fp = {_canon(f["file_path"]): f for f in candidates}
-            nd = _dv_delete_entries(
-                path, dv_rows, by_fp, snapshot_id, new_seq) \
-                if dv_rows else []
-            sid = _commit_snapshot(
-                appended, path, meta, carried=carried,
-                operation="overwrite", carried_deletes=cd,
-                new_deletes=nd, snapshot_id=snapshot_id, branch=branch)
+            sid, carried = _commit_dvs(
+                appended, path, meta, active, pos_dels, eq_dels, dv,
+                "overwrite", branch)
             return {"touched": len(dv_rows) + len(dead),
                     "new_files": _added_files_of(meta, sid),
                     "dv_files": len(dv_rows), "kept": len(carried),
@@ -1400,11 +1350,8 @@ def merge_iceberg(
         # path
         probe = _mor_read(spark, path, meta, candidates, pos_dels, eq_dels,
                           empty_schema=target.schema, keep_file_col=True)
-        touched = {
-            _canon(r["__file"]) for r in
-            probe.select("__file", *pk)
-            .join(src.select(*pk).distinct(), on=pk, how="left_semi")
-            .select("__file").distinct().collect()}
+        touched = {_canon(fp) for fp in
+                   touched_files(probe, "__file", src, pk)}
         touched_entries = [f for f in active
                            if _canon(f["file_path"]) in touched]
         touched_rows = _mor_read(spark, path, meta, touched_entries,
@@ -1466,52 +1413,33 @@ def delete_missing_iceberg(
         path, meta, _branch_head(meta, branch))
     keys = keyset.select(*pk).distinct()
     # parquet position-delete files shadow unknown (file, pos) pairs a
-    # raw census can't see — DV production needs a DV-only (or
+    # raw position scan can't see — DV production needs a DV-only (or
     # delete-free) table; v3 tables are by construction
     if active and not soft and _dv_writes_enabled_ice(meta, use_dvs) \
             and all((d.get("file_format") or "PARQUET").upper() == "PUFFIN"
                     for d in pos_dels):
-        # the census over ALL active entries doubles as the
-        # touched-file probe: one scan of the table, not two
+        # the doomed-positions scan over ALL active entries doubles
+        # as the touched-file probe: one scan of the table, not two
         dv = _produce_dvs_ice(
             spark, path, meta, active, pos_dels, pk, keys,
             doom_matched=False, max_dv_rows=max_dv_rows)
         if dv is not None:
-            dv_rows, superseded, dead = dv
+            dv_rows, _, dead = dv
             if not dv_rows and not dead:
                 return {"touched": 0, "new_files": 0,
                         "kept": len(active),
                         "snapshot_id": meta.get("current-snapshot-id")}
-            carried = [f for f in active
-                       if _canon(f["file_path"]) not in dead]
-            live_pos = [
-                d for d in pos_dels
-                if (d["file_path"], d.get("content_offset"))
-                not in superseded
-                and not (d.get("referenced_data_file")
-                         and _canon(d["referenced_data_file"]) in dead)]
-            cd = _live_delete_files(carried, live_pos, eq_dels)
-            snapshot_id, new_seq = _next_ids(path, meta, carried, cd)
-            by_fp = {_canon(f["file_path"]): f for f in active}
-            nd = _dv_delete_entries(
-                path, dv_rows, by_fp, snapshot_id, new_seq) \
-                if dv_rows else []
-            sid = _commit_snapshot(
-                None, path, meta, carried=carried, operation="delete",
-                carried_deletes=cd, new_deletes=nd,
-                snapshot_id=snapshot_id, branch=branch)
+            sid, carried = _commit_dvs(
+                None, path, meta, active, pos_dels, eq_dels, dv, "delete",
+                branch)
             return {"touched": len(dv_rows) + len(dead), "new_files": 0,
                     "dv_files": len(dv_rows), "kept": len(carried),
                     "snapshot_id": sid}
         # dense delete: fall through to the CoW rewrite below
     scan = _mor_read(spark, path, meta, active, pos_dels, eq_dels,
                      keep_file_col=True)
-    touched = {
-        _canon(r["__file"]) for r in
-        scan.select("__file", *pk)
-        .join(keys, on=pk, how="left_anti")
-        .select("__file").distinct().collect()
-    }
+    touched = {_canon(fp) for fp in
+               touched_files(scan, "__file", keys, pk, matched=False)}
     if not touched:
         return {"touched": 0, "new_files": 0, "kept": len(active),
                 "snapshot_id": meta.get("current-snapshot-id")}
@@ -1572,9 +1500,8 @@ def overwrite_where_iceberg(
     if candidates:
         scan = _mor_read(spark, path, meta, candidates, pos_dels,
                          eq_dels, keep_file_col=True)
-        touched = {_canon(r["__file"]) for r in
-                   scan.filter(pred_true)
-                   .select("__file").distinct().collect()}
+        touched = {_canon(fp) for fp in
+                   touched_files(scan.filter(pred_true), "__file")}
     touched_entries = [f for f in active
                        if _canon(f["file_path"]) in touched]
     keep = [f for f in active if _canon(f["file_path"]) not in touched]
@@ -1679,9 +1606,9 @@ def upsert_iceberg(
         keys.write.option("compression", "zstd").parquet(tmp)
     ice_keys = _ice_schema_for(
         keys, base=current, last_column_id=meta.get("last-column-id", 0))
-    staged = _staged_file_stats(keys, tmp, ice_keys)
+    staged = _data_file_bounds(keys, tmp, ice_keys)
     del_entries: list[dict] = []
-    for rel in sorted(_walk_parquet(fs, tmp)):
+    for rel in sorted(_walk_data_files(fs, tmp)):
         dest = fsio.join(data_dir, f"{uuid.uuid4().hex}-deletes.parquet")
         if not fs.rename(fsio.join(tmp, rel), dest):
             raise IOError(f"iceberg eq-delete stage: could not place {rel}")
@@ -1879,138 +1806,75 @@ def _with_spec_partition_cols(df: DataFrame, meta: dict):
     return out
 
 
-def _walk_parquet(fs, base: str, rel: str = "") -> list[str]:
-    """Relative paths of all parquet files under ``base`` (partitioned
-    stages nest one dir level per partition column)."""
-    out: list[str] = []
-    cur = fsio.join(base, rel) if rel else base
-    for name in fs.listdir(cur):
-        if name.startswith((".", "_")):
-            continue
-        child = fsio.join(rel, name) if rel else name
-        if fs.isdir(fsio.join(base, child)):
-            out.extend(_walk_parquet(fs, base, child))
-        elif name.endswith(".parquet"):
-            out.append(child)
-    return out
-
-
-def _footer_ice_stats(
-    footer: dict[str, dict], cols: list[tuple[str, str, str]],
-) -> dict[str, dict]:
-    """Footer-derived data_file stats (the zero-extra-job fast path of
-    :func:`_staged_file_stats`): record counts and bounds straight from
-    the parquet footers (exact-or-absent, footer_stats.py); identity-
-    partition columns are synthesized from the Hive dir value — exact
-    by construction — for the losslessly-parseable types.
-    ``_encode_bound`` keeps its NaN guard, so a NaN footer max omits
-    the bound pair exactly like the Spark-job path."""
-    import datetime as _dt
-
-    def _from_dir(t: str, raw: str):
-        if t == "string":
-            return raw
-        if t in ("int", "long"):
-            return int(raw)
-        if t == "date":
-            return _dt.date.fromisoformat(raw)
-        if t == "boolean":
-            return raw == "true"
-        if t in ("timestamp", "timestamptz"):
-            # dir renders in the UTC-pinned session tz, micros precision
-            return _dt.datetime.fromisoformat(raw)
-        raise ValueError(t)
-
-    out: dict[str, dict] = {}
-    for key, fst in footer.items():
-        pvals = {}
-        for seg in fst["rel_dir"].split("/"):
-            if "=" in seg:
-                k, _, v = seg.partition("=")
-                pvals[k] = unquote(v)
-        lo, hi = {}, {}
-        if fst["num_rows"]:
-            for name, fid, t in cols:
-                ent = fst["cols"].get(name)
-                if ent is not None:
-                    mn, mx = ent.get("mn"), ent.get("mx")
-                elif name in pvals:
-                    raw = pvals[name]
-                    if raw == "__HIVE_DEFAULT_PARTITION__":
-                        continue
-                    try:
-                        mn = mx = _from_dir(t, raw)
-                    except (ValueError, TypeError):
-                        continue
-                else:
-                    continue
-                try:
-                    lb = _encode_bound(t, mn)
-                    ub = _encode_bound(t, mx)
-                except Exception:
-                    lb = ub = None
-                if lb is not None and ub is not None:
-                    lo[fid], hi[fid] = lb, ub
-        out[key] = {"n": int(fst["num_rows"]),
-                    "lower": lo or None, "upper": hi or None}
-    return out
-
-
-def _staged_file_stats(
+def _data_file_bounds(
     df: DataFrame, tmp: str, ice_schema: dict,
 ) -> dict[str, dict]:
     """Per-file stats of the freshly staged directory, keyed by
     canonical path: row count (required data_file stat in v2 — foreign
     engines trust it for metadata-only count(*)) plus value bounds for
     the boundable columns (spec data_file.lower_bounds/upper_bounds,
-    keyed by field id, single-value binary serialization). Served from
-    the freshly written parquet FOOTERS when the stage is on local
-    disk (no extra job — re-reading 100% of staged bytes to recompute
-    what the writer already recorded is the guide-§6 anti-pattern);
-    otherwise ONE fs-agnostic Spark job — the count and every min/max
-    batch into a single hash aggregate over the files just written (a
-    commit to hdfs://-style storage keeps exact stats this way).
-    Failure degrades to no stats, never a failed commit."""
-    from pyspark.sql import functions as F
-
+    keyed by field id, single-value binary serialization) —
+    :func:`footer_stats.staged_stats` encoded. ``_encode_bound`` keeps
+    its NaN guard, so a NaN max omits the bound pair."""
     cols = [(f["name"], str(f["id"]), f["type"])
             for f in ice_schema.get("fields", [])
             if isinstance(f.get("type"), str)
             and f["type"] in _BOUND_TYPES and f["name"] in df.columns]
-    from sling_cli_spark.sources.footer_stats import staged_footer_stats
-
-    footer = staged_footer_stats(tmp)
-    if footer is not None:
-        return _footer_ice_stats(footer, cols)
-    aggs = [F.count(F.lit(1)).alias("__n")]
-    for i, (name, _, _t) in enumerate(cols):
-        c = F.col(f"`{name}`")
-        aggs += [F.min(c).alias(f"__mn{i}"), F.max(c).alias(f"__mx{i}")]
-    try:
-        rows = (df.sparkSession.read.parquet(tmp)
-                .groupBy(F.col("_metadata.file_path").alias("__fp"))
-                .agg(*aggs).collect())
-    except Exception:
-        return {}
-    from sling_cli_spark.sources.delta_py import _naive_utc
-
     out: dict[str, dict] = {}
-    for r in rows:
+    names = [c for c, _, _ in cols]
+    for key, st in staged_stats(df, tmp, names, null_counts=False).items():
         lo, hi = {}, {}
-        for i, (name, fid, t) in enumerate(cols):
+        for name, fid, t in cols if st["num_rows"] else ():
+            ent = st["cols"].get(name) or {}
             try:
-                # collect() timestamps are naive OS-local — normalize
-                # to the naive-UTC instant the footer path encodes
-                lb = _encode_bound(t, _naive_utc(r[f"__mn{i}"]))
-                ub = _encode_bound(t, _naive_utc(r[f"__mx{i}"]))
+                lb = _encode_bound(t, ent.get("mn"))
+                ub = _encode_bound(t, ent.get("mx"))
             except Exception:
-                lb = ub = None
+                continue  # a value the type cannot encode: no bound
             if lb is not None and ub is not None:
                 lo[fid], hi[fid] = lb, ub
-        out[_canon(r["__fp"])] = {
-            "n": int(r["__n"]),
-            "lower": lo or None, "upper": hi or None}
+        out[key] = {"n": int(st["num_rows"]),
+                    "lower": lo or None, "upper": hi or None}
     return out
+
+
+_DECIMAL = re.compile(r"decimal\((\d+),\s*(\d+)\)")
+
+
+def _promotes(old, new) -> bool:
+    """Is ``old`` -> ``new`` a legal primitive type promotion (spec
+    §Schema Evolution: int -> long, float -> double, decimal(P, S) ->
+    decimal(P', S) with P' > P)?"""
+    if not (isinstance(old, str) and isinstance(new, str)):
+        return False
+    if (old, new) in (("int", "long"), ("float", "double")):
+        return True
+    a, b = _DECIMAL.fullmatch(old), _DECIMAL.fullmatch(new)
+    return bool(a and b) and a[2] == b[2] and int(b[1]) > int(a[1])
+
+
+def _retyped(path: str, cur: dict, ice: dict, keeps_files: bool) -> bool:
+    """Compare the frame's schema ``ice`` with the table's ``cur`` field
+    by field id: True when a column's type changes (the commit must
+    record the new type, or reads of the new files fail). When the
+    snapshot keeps existing data files, only a legal promotion may
+    change a type — any other change would leave those files unreadable
+    and is refused; a full overwrite may retype freely."""
+    old_types = {f["id"]: f["type"] for f in cur.get("fields", [])}
+    retyped = False
+    for f in ice["fields"]:
+        old = old_types.get(f["id"])
+        if old is None or old == f["type"]:
+            continue
+        if keeps_files and not _promotes(old, f["type"]):
+            raise UnsupportedTableFeature(
+                f"iceberg table at {path}: column {f['name']!r} is "
+                f"{old} in the table but {f['type']} in the written "
+                "frame — only int->long, float->double and decimal "
+                "precision widening are legal type changes; cast the "
+                "frame to the table's type")
+        retyped = True
+    return retyped
 
 
 def _branch_head(meta: dict, branch: str) -> int | None:
@@ -2131,6 +1995,20 @@ def _commit_snapshot(
         stage_df = df
         if lineage:
             df = df.drop(*lineage)
+        # the schema this commit will record (stable field ids by name,
+        # fresh ids for new columns) — shared by the bounds stats below
+        # and the schema-evolution branch at the end; a refused type
+        # change raises here, before anything is staged. A snapshot
+        # that keeps data files (append, merge, rewrite, or a branch
+        # write beside main's files) must stay readable over them; a
+        # full overwrite of main replaces them all.
+        keeps_files = bool(carried or carried_deletes or reuse_manifests
+                           or branch != "main")
+        ice_for_df = _ice_schema_for(
+            df, base=cur_schema0,
+            last_column_id=meta.get("last-column-id", 0),
+            keep_wider=keeps_files)
+        retyped = _retyped(path, cur_schema0, ice_for_df, keeps_files)
         if transform_fields:
             from sling_cli_spark.sources.iceberg_transforms import (
                 spark_type_name)
@@ -2206,24 +2084,14 @@ def _commit_snapshot(
             if part_cols:
                 writer = writer.partitionBy(*part_cols)
             writer.parquet(tmp)
-        # the schema this commit will record (stable field ids by name,
-        # fresh ids for new columns) — shared by the bounds stats below
-        # and the schema-evolution branch at the end
-        ice_for_df = _ice_schema_for(
-            df, base=cur_schema0,
-            last_column_id=meta.get("last-column-id", 0))
-        staged_stats = _staged_file_stats(df, tmp, ice_for_df)
-        for rel in sorted(_walk_parquet(fs, tmp)):
+        staged_stats = _data_file_bounds(df, tmp, ice_for_df)
+        for rel in sorted(_walk_data_files(fs, tmp)):
             # rel like "c=v/.../part-....parquet" for partitioned
             # stages; dir segments are URL-escaped by Spark (space,
             # ':', '%') — store the UNQUOTED value so the merge prune
-            # compares like with like (delta_py._partition_values does
-            # the same)
+            # compares like with like
             part_dirs, fname = os.path.split(rel)
-            partition = {
-                k: unquote(v) for k, _, v in
-                (seg.partition("=")
-                 for seg in part_dirs.split("/") if "=" in seg)}
+            partition = hive_partition_values(part_dirs)
             new_name = f"{uuid.uuid4().hex}.parquet"
             dest_dir = fsio.join(data_dir, part_dirs) \
                 if part_dirs else data_dir
@@ -2380,10 +2248,12 @@ def _commit_snapshot(
                _MANIFEST_FILE_SCHEMA_V2 if fv >= 2 else _MANIFEST_FILE_SCHEMA)
 
     recorded = [f["name"] for f in cur_schema0.get("fields", [])]
-    if df is not None and [f.name for f in df.schema.fields] != recorded:
+    if df is not None and (
+            retyped or [f.name for f in df.schema.fields] != recorded):
         # schema evolution rides the commit. v2: a NEW schema-id appended
         # to schemas (field ids stable by name, new columns take fresh
-        # ids — spec §Schema Evolution); v1 single-schema just replaces.
+        # ids, retyped columns their new type — spec §Schema
+        # Evolution); v1 single-schema just replaces.
         ice = ice_for_df
         if fv >= 2:
             new_sid = 1 + max(
@@ -2598,9 +2468,6 @@ def migrate_to_iceberg(
     the entries from ONE Spark aggregate so bounds pruning works from
     the first snapshot. Refuses directories that are already Iceberg
     or Delta tables. Returns the snapshot id."""
-    from sling_cli_spark.sources.delta_py import (
-        _partition_values, _walk_data_files)
-
     fs = fsio.get_fs(path)
     if is_iceberg_table(path):
         raise ValueError(f"{path} is already an iceberg table")
@@ -2612,7 +2479,7 @@ def migrate_to_iceberg(
     if not rels:
         raise FileNotFoundError(f"no parquet files under {path}")
     inferred = sorted({k for rel in rels
-                       for k in _partition_values(
+                       for k in hive_partition_values(
                            os.path.dirname(rel))})
     part_cols = partition_by if partition_by is not None else inferred
     if set(part_cols) != set(inferred):
@@ -2625,7 +2492,7 @@ def migrate_to_iceberg(
     meta = _init_meta(df, path, part_cols)
     ice_schema = _current_schema(meta) or {"fields": []}
     data_cols = df.drop(*part_cols) if part_cols else df
-    stats = _staged_file_stats(data_cols, path, ice_schema)
+    stats = _data_file_bounds(data_cols, path, ice_schema)
     staged = []
     for rel in sorted(rels):
         full = fsio.join(path, rel)
@@ -2635,7 +2502,7 @@ def migrate_to_iceberg(
             "file_format": "PARQUET",
             "record_count": st.get("n", 0),
             "file_size_in_bytes": fs.getsize(full),
-            "partition": _partition_values(os.path.dirname(rel))
+            "partition": hive_partition_values(os.path.dirname(rel))
             or None,
             "lower_bounds": st.get("lower"),
             "upper_bounds": st.get("upper"),
@@ -4298,94 +4165,78 @@ def _produce_dvs_ice(
     spark, path: str, meta: dict, touched_entries: list[dict],
     pos_dels: list[dict], pk: list[str], keys: DataFrame,
     doom_matched: bool, max_dv_rows: int = 4_000_000,
-) -> tuple[list[dict], set, set, int] | None:
+) -> tuple[dict[str, list[int]], set, set] | None:
     """Produce v3 deletion vectors for a sparse delete over
     ``touched_entries`` (spec v3 §Deletion Vectors: one DV per data
-    file; a new DV must supersede the old by merging its positions).
-
-    One scan+join pass yields the doomed coordinates; the driver
-    pulls positions only after the doomed COUNT passes the density
-    gate, and the fully-dead check reads physical row counts from the
-    manifest's ``record_count``. Returns ``(dv_rows, superseded,
-    dead)`` — merged positions per surviving file (existing DV
-    positions unioned in: one DV per file, the new vector supersedes
-    the old), the ``(file_path, content_offset)`` keys of replaced DV
-    manifest entries, and canonical paths of fully-dead files (every
-    physical row deleted — they simply drop from the carried list, no
-    DV needed) — or None when the delete is dense (> ``max_dv_rows``
-    doomed positions) and CoW is the better plan.
-    :func:`_dv_delete_entries` turns ``dv_rows`` into the Puffin file +
-    manifest entries once the snapshot ids are known.
-    """
-    from pyspark.sql import functions as F
-
+    file, superseding the old one by merging its positions —
+    :func:`lake_core.doomed_positions` + :func:`lake_core.fold_dv_rows`;
+    physical row counts from the manifest's ``record_count``). Returns
+    ``(dv_rows, superseded, dead)``: merged positions per surviving
+    file, the ``(file_path, content_offset)`` keys of replaced DV
+    entries and the canonical paths of fully-dead files — or None when
+    the delete is dense (> ``max_dv_rows`` doomed positions) and CoW is
+    the better plan. :func:`_commit_dvs` commits the result."""
     from sling_cli_spark.sources import puffin
 
-    from pyspark.storagelevel import StorageLevel
-
-    # ONE scan+join pass (guide §1.2: the former census/positions
-    # split scanned and joined the touched files TWICE). The doomed
-    # (file, position) coordinates persist so the count action and the
-    # positions action share the single join; the DRIVER collect of
-    # positions stays gated on the counts — a dense delete
-    # (> max_dv_rows doomed) returns None (CoW fallback) without ever
-    # pulling positions. Keep that gate if you touch this: an
-    # unbounded positions collect is the 100 TB failure mode. The
-    # executor cache holds only doomed coordinates (~16 B/row,
-    # disk-spillable), which a dense delete's CoW fallback was going
-    # to rewrite in full anyway.
-    scan = _raw_position_scan_ice(spark, path, meta, touched_entries)
-    keyset = keys.select(*pk).distinct()
-    how = "left_semi" if doom_matched else "left_anti"
-    coords = scan.join(keyset, on=pk, how=how).select("__fp", "__pos")
-    coords.persist(StorageLevel.MEMORY_AND_DISK)
-    try:
-        doom = {r["__fp"]: r["count"]
-                for r in coords.groupBy("__fp").count().collect()}
-        if not doom:
-            return {}, set(), set()
-        if sum(doom.values()) > max_dv_rows:
-            return None
-        pos_rows = coords.groupBy("__fp") \
-            .agg(F.sort_array(F.collect_list("__pos")).alias("__ps")) \
-            .collect()
-        positions = {r["__fp"]: list(r["__ps"]) for r in pos_rows}
-    finally:
-        coords.unpersist()
-    doomed_fps = set(doom)
+    doom, positions = doomed_positions(
+        _raw_position_scan_ice(spark, path, meta, touched_entries),
+        keys, pk, doom_matched, max_dv_rows)
+    if not doom:
+        return {}, set(), set()
+    if positions is None:
+        return None
     by_fp = {_canon(f["file_path"]): f for f in touched_entries}
+    old_dv = {_canon(d["referenced_data_file"]): d for d in pos_dels
+              if (d.get("file_format") or "PARQUET").upper() == "PUFFIN"
+              and d.get("referenced_data_file")}
 
-    def _phys_rows(fp: str) -> int:
+    def old_positions(fp):
+        old = old_dv.get(fp)
+        if old is None:
+            return ()
+        return puffin.dv_blob_indices(puffin.read_blob(
+            old["file_path"], int(old["content_offset"]),
+            int(old["content_size_in_bytes"])))
+
+    def phys_rows(fp):
         # the manifest's record_count is the file's physical row count
         # (spec: "Number of records in this file"); footer fallback
         # when a foreign writer omitted it
         n = int(by_fp[fp].get("record_count") or 0)
         return n if n > 0 else footer_num_rows(fp)
 
-    # merge existing DV positions (one DV per file: the new vector
-    # supersedes the old, which must not carry forward)
-    superseded: set = set()
-    dv_by_ref: dict[str, dict] = {}
-    for d in pos_dels:
-        if (d.get("file_format") or "PARQUET").upper() == "PUFFIN" \
-                and d.get("referenced_data_file"):
-            dv_by_ref[_canon(d["referenced_data_file"])] = d
-    dead: set = set()
-    dv_rows: dict[str, list[int]] = {}
-    for fp in sorted(doomed_fps):
-        merged = set(positions.get(fp) or ())
-        old = dv_by_ref.get(fp)
-        if old is not None:
-            blob = puffin.read_blob(
-                old["file_path"], int(old["content_offset"]),
-                int(old["content_size_in_bytes"]))
-            merged |= {int(i) for i in puffin.dv_blob_indices(blob)}
-            superseded.add((old["file_path"], old["content_offset"]))
-        if len(merged) >= _phys_rows(fp):
-            dead.add(fp)  # every physical row deleted -> drop the file
-        else:
-            dv_rows[fp] = sorted(merged)
-    return dv_rows, superseded, dead
+    dv_rows, dead = fold_dv_rows(doom, positions, old_positions, phys_rows)
+    # the new vectors supersede the old ones, which must not carry
+    superseded = {(old_dv[fp]["file_path"], old_dv[fp]["content_offset"])
+                  for fp in doom if fp in old_dv}
+    return dv_rows, superseded, set(dead)
+
+
+def _commit_dvs(
+    df: DataFrame | None, path: str, meta: dict, active: list[dict],
+    pos_dels: list[dict], eq_dels: list[dict], dv: tuple,
+    operation: str, branch: str,
+) -> tuple[int, list[dict]]:
+    """Commit :func:`_produce_dvs_ice`'s result (plus ``df``'s rows as
+    new files): fully-dead files and the DVs of dead or superseded
+    vectors drop out, the new vectors land as one Puffin file. Returns
+    ``(snapshot id, carried data files)``."""
+    dv_rows, superseded, dead = dv
+    carried = [f for f in active if _canon(f["file_path"]) not in dead]
+    live_pos = [
+        d for d in pos_dels
+        if (d["file_path"], d.get("content_offset")) not in superseded
+        and not (d.get("referenced_data_file")
+                 and _canon(d["referenced_data_file"]) in dead)]
+    cd = _live_delete_files(carried, live_pos, eq_dels)
+    snapshot_id, new_seq = _next_ids(path, meta, carried, cd)
+    by_fp = {_canon(f["file_path"]): f for f in active}
+    nd = _dv_delete_entries(path, dv_rows, by_fp, snapshot_id, new_seq) \
+        if dv_rows else []
+    return _commit_snapshot(
+        df, path, meta, carried=carried, operation=operation,
+        carried_deletes=cd, new_deletes=nd, snapshot_id=snapshot_id,
+        branch=branch), carried
 
 
 def _dv_delete_entries(

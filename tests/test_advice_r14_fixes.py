@@ -111,10 +111,10 @@ def test_staged_stats_fallback_matches_footer_on_non_utc(
     # files, which the Spark-job groupBy can't see — an established
     # difference outside this pin's scope (timestamp bound equality)
     df.coalesce(1).write.parquet(tmp)
-    via_footer = delta_py._staged_stats(df, tmp)
+    via_footer = delta_py._add_stats_json(df, tmp)
     monkeypatch.setattr(
         footer_stats, "staged_footer_stats", lambda _tmp: None)
-    via_job = delta_py._staged_stats(df, tmp)
+    via_job = delta_py._add_stats_json(df, tmp)
     assert set(via_footer) == set(via_job)
     for k in via_footer:
         a, b = json.loads(via_footer[k]), json.loads(via_job[k])

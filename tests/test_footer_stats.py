@@ -1,7 +1,10 @@
-"""Footer-derived staged stats (r14 optimization): the lake writers'
-per-file skipping stats come from parquet footers on local disk —
-no re-scan job — and must agree value-for-value with the Spark-job
-fallback path (exact-or-absent semantics)."""
+"""Footer-derived staged stats: the lake writers' per-file skipping
+stats come from parquet footers on local disk — no re-scan job — and
+must agree value-for-value with the Spark-job fallback path
+(exact-or-absent semantics). Both formats encode the one producer,
+``footer_stats.staged_stats``: Delta as ``add.stats`` JSON
+(``_add_stats_json``), Iceberg as field-id binary bounds
+(``_data_file_bounds``)."""
 
 import datetime
 import json
@@ -43,8 +46,8 @@ def test_delta_footer_stats_match_spark_job(
     df = _typed_df(spark).coalesce(1)
     tmp = str(tmp_path / "stage")
     df.write.parquet(tmp)
-    new = D._staged_stats(df, tmp)
-    old = _force_spark_job(D._staged_stats, df, tmp)
+    new = D._add_stats_json(df, tmp)
+    old = _force_spark_job(D._add_stats_json, df, tmp)
     assert set(new) == set(old) and len(new) == 1
     for k in new:
         assert json.loads(new[k]) == json.loads(old[k])
@@ -63,8 +66,8 @@ def test_delta_footer_stats_partition_synthesis(
         "id long, day string")
     tmp = str(tmp_path / "stage")
     df.write.partitionBy("day").parquet(tmp)
-    new = D._staged_stats(df, tmp)
-    old = _force_spark_job(D._staged_stats, df, tmp)
+    new = D._add_stats_json(df, tmp)
+    old = _force_spark_job(D._add_stats_json, df, tmp)
     assert set(new) == set(old) and len(new) == 3
     for k in new:
         assert json.loads(new[k]) == json.loads(old[k])
@@ -82,7 +85,7 @@ def test_delta_footer_stats_long_string_absent(spark, tmp_path):
         [(1, "x" * 6000), (2, "y")], "id long, s string").coalesce(1)
     tmp = str(tmp_path / "stage")
     df.write.parquet(tmp)
-    (st,) = D._staged_stats(df, tmp).values()
+    (st,) = D._add_stats_json(df, tmp).values()
     s = json.loads(st)
     assert "s" not in s["minValues"] and "s" not in s["maxValues"]
     assert s["minValues"]["id"] == 1  # clean columns keep exact bounds
@@ -100,11 +103,90 @@ def test_iceberg_footer_stats_match_spark_job(
     tmp = str(tmp_path / "stage")
     df.write.partitionBy("t").parquet(tmp)
     sch = I._ice_schema_for(df)
-    new = I._staged_file_stats(df, tmp, sch)
-    old = _force_spark_job(I._staged_file_stats, df, tmp, sch)
+    new = I._data_file_bounds(df, tmp, sch)
+    old = _force_spark_job(I._data_file_bounds, df, tmp, sch)
     assert new == old and len(new) == 2
     for st in new.values():
         assert st["n"] == 1 and set(st["lower"]) == {"1", "2"}
+
+
+def _ice_parity(spark, df, tmp, _force_spark_job, partition_by=None):
+    """Stage ``df``, encode its Iceberg bounds on both paths, assert
+    they are identical, and return them."""
+    w = df.write.partitionBy(*partition_by) if partition_by else df.write
+    w.parquet(tmp)
+    sch = I._ice_schema_for(df)
+    new = I._data_file_bounds(df, tmp, sch)
+    old = _force_spark_job(I._data_file_bounds, df, tmp, sch)
+    assert new == old
+    return sch, new
+
+
+def _fid(sch, name):
+    return next(str(f["id"]) for f in sch["fields"] if f["name"] == name)
+
+
+def test_iceberg_footer_stats_nan_double(spark, tmp_path, _force_spark_job):
+    """A NaN in a double column omits that column's bound pair on both
+    paths; the clean columns keep exact bounds."""
+    import struct
+
+    sch, new = _ice_parity(spark, _typed_df(spark).coalesce(1),
+                           str(tmp_path / "stage"), _force_spark_job)
+    (st,) = new.values()
+    assert st["n"] == 3
+    assert _fid(sch, "b") not in st["lower"]
+    assert struct.unpack("<q", st["lower"][_fid(sch, "a")])[0] == 1
+    assert st["upper"][_fid(sch, "c")] == b"omega"
+
+
+def test_iceberg_footer_stats_long_string_absent(spark, tmp_path):
+    """Spark's parquet writer DROPS (never truncates) stats for long
+    binary values; the footer path must omit the bound, not record a
+    partial one."""
+    df = spark.createDataFrame(
+        [(1, "x" * 6000), (2, "y")], "id long, s string").coalesce(1)
+    tmp = str(tmp_path / "stage")
+    df.write.parquet(tmp)
+    sch = I._ice_schema_for(df)
+    (st,) = I._data_file_bounds(df, tmp, sch).values()
+    assert _fid(sch, "s") not in st["lower"]
+    assert _fid(sch, "s") not in st["upper"]
+    assert _fid(sch, "id") in st["lower"]  # clean columns keep bounds
+
+
+def test_iceberg_footer_stats_null_partition(
+        spark, tmp_path, _force_spark_job):
+    """A null identity partition records no bound for its column; the
+    other partitions' bounds come from the dir value, equal to the
+    Spark job's."""
+    df = spark.createDataFrame(
+        [(1, "2024-01-01"), (2, "2024-02-01"), (3, None)],
+        "id long, day string")
+    sch, new = _ice_parity(spark, df, str(tmp_path / "stage"),
+                           _force_spark_job, partition_by=["day"])
+    assert len(new) == 3
+    day = _fid(sch, "day")
+    nullfile = next(k for k in new if "__HIVE_DEFAULT_PARTITION__" in k)
+    assert day not in new[nullfile]["lower"]
+    assert sorted(st["lower"][day] for k, st in new.items()
+                  if k != nullfile) == [b"2024-01-01", b"2024-02-01"]
+
+
+def test_iceberg_footer_stats_float_partition(
+        spark, tmp_path, _force_spark_job):
+    """Float and double identity partitions take their bounds from the
+    dir value, identical to the Spark job's."""
+    import struct
+
+    df = spark.createDataFrame(
+        [(1, 1.5, 0.25), (2, -2.0, 3.5)], "id long, d double, f float")
+    sch, new = _ice_parity(spark, df, str(tmp_path / "stage"),
+                           _force_spark_job, partition_by=["d", "f"])
+    got = sorted((struct.unpack("<d", st["lower"][_fid(sch, "d")])[0],
+                  struct.unpack("<f", st["upper"][_fid(sch, "f")])[0])
+                 for st in new.values())
+    assert got == [(-2.0, 3.5), (1.5, 0.25)]
 
 
 def test_footer_stats_non_local_scheme_falls_back():

@@ -2234,3 +2234,84 @@ def test_position_deletes_metadata_twin(spark, tmp_path):
     compact_iceberg(spark, t, purge_dvs=True, dv_purge_ratio=0.1)
     assert iceberg_position_deletes(spark, t).count() == 0
     assert read_iceberg(spark, t).count() == 8
+
+
+def test_append_widening_a_column_records_the_promotion(spark, tmp_path):
+    """An append whose frame widens a column (int -> long) records the
+    promoted type, so the next read returns longs for old and new
+    files; a frame narrower than the table changes nothing, and an
+    incompatible type change is refused before anything is staged."""
+    t = str(tmp_path / "t")
+    write_iceberg(spark.createDataFrame([(1,)], "id int"), t)
+    write_iceberg(spark.createDataFrame([(2 ** 40,)], "id long"), t)
+    out = read_iceberg(spark, t)
+    assert out.schema["id"].dataType.typeName() == "long"
+    assert sorted(r["id"] for r in out.collect()) == [1, 2 ** 40]
+    write_iceberg(spark.createDataFrame([(3,)], "id int"), t)
+    out = read_iceberg(spark, t)
+    assert out.schema["id"].dataType.typeName() == "long"
+    assert sorted(r["id"] for r in out.collect()) == [1, 3, 2 ** 40]
+    n_files = len(os.listdir(os.path.join(t, "data")))
+    with pytest.raises(Exception, match="int->long"):
+        write_iceberg(spark.createDataFrame([("x",)], "id string"), t)
+    assert len(os.listdir(os.path.join(t, "data"))) == n_files
+
+
+def test_bounds_across_a_promotion_prune_and_decode(spark, tmp_path):
+    """Files written before an int -> long / float -> double promotion
+    keep their 4-byte bounds (spec Appendix D); the pruner decodes
+    them under the promoted type, and a narrower frame appended after
+    the promotion records 8-byte bounds under the table's type."""
+    from sling_cli_spark.sources import iceberg_py as I
+
+    t = str(tmp_path / "t")
+    write_iceberg(spark.range(1000, 2001, numPartitions=1).selectExpr(
+        "cast(id as int) id", "cast(id as float) x"), t)
+    write_iceberg(spark.range(1, 11, numPartitions=1).selectExpr(
+        "id", "cast(id as double) x"), t)
+    write_iceberg(spark.range(3000, 3011, numPartitions=1).selectExpr(
+        "cast(id as int) id", "cast(id as float) x"), t)
+    _, meta = I._current_metadata(t)
+    assert [f["type"] for f in I._current_schema(meta)["fields"]] == \
+        ["long", "double"]
+    files = sorted(I._active_files(t, meta, None), key=lambda f:
+                   I._decode_bound("long", f["upper_bounds"]["1"]))
+    assert [len(f["upper_bounds"]["1"]) for f in files] == [8, 4, 8]
+    assert [I._decode_bound("long", f["upper_bounds"]["1"])
+            for f in files] == [10, 2000, 3010]
+    assert [I._decode_bound("double", f["upper_bounds"]["2"])
+            for f in files] == [10.0, 2000.0, 3010.0]
+    kept = I.prune_files_by_bounds(files, [("id", ">", 2500)], meta)
+    assert [I._decode_bound("long", f["upper_bounds"]["1"])
+            for f in kept] == [3010]
+    kept = I.prune_files_by_bounds(files, [("x", "<", 500.0)], meta)
+    assert [I._decode_bound("long", f["upper_bounds"]["1"])
+            for f in kept] == [10]
+    out = read_iceberg(spark, t, skip_filters=[("id", ">", 1500)])
+    assert out.filter("id > 1500").count() == 500 + 11
+
+
+def test_full_overwrite_may_retype_a_column(spark, tmp_path):
+    """A full overwrite replaces every data file, so it records the
+    frame's types as they are — also a change no promotion allows, with
+    or without a column added — while an append with the same frame is
+    refused."""
+    t = str(tmp_path / "t")
+    write_iceberg(spark.createDataFrame([(1, 2)], "id long, v int"), t)
+    with pytest.raises(Exception, match="int->long"):
+        write_iceberg(spark.createDataFrame([("a", 2)],
+                                            "id string, v int"), t)
+    write_iceberg(spark.createDataFrame([("a", 2, 1.5)],
+                                        "id string, v int, w double"),
+                  t, mode="overwrite")
+    out = read_iceberg(spark, t)
+    assert [(f.name, f.dataType.simpleString())
+            for f in out.schema.fields] == \
+        [("id", "string"), ("v", "int"), ("w", "double")]
+    assert [tuple(r) for r in out.collect()] == [("a", 2, 1.5)]
+    write_iceberg(spark.createDataFrame([(7, 3, 2.5)],
+                                        "id int, v int, w double"),
+                  t, mode="overwrite")
+    out = read_iceberg(spark, t)
+    assert out.schema["id"].dataType.simpleString() == "int"
+    assert [tuple(r) for r in out.collect()] == [(7, 3, 2.5)]

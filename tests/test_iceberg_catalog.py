@@ -177,6 +177,18 @@ def test_max_value_from_manifests_no_scan(cat, spark):
         datetime.timedelta(days=days) == datetime.date(2024, 4, 9)
 
 
+def test_max_value_reads_bounds_from_before_a_promotion(cat, spark):
+    """A file written while ``id`` was int keeps 4-byte bounds after
+    the int -> long promotion; the watermark still counts it."""
+    cat.create_namespace("db")
+    create_table(cat, "db.t", spark.range(0).selectExpr(
+        "cast(id as int) id").schema)
+    write_table(spark.range(90, 100).selectExpr("cast(id as int) id"),
+                cat, "db.t")
+    write_table(spark.range(1, 10), cat, "db.t")
+    assert max_value(cat, "db.t", "id") == 99
+
+
 def test_concurrent_commits_serialize(cat, spark, tmp_path):
     """Two threads CAS against the same pointer: exactly one wins per
     round — the sqlite conditional UPDATE serializes them."""
